@@ -13,14 +13,7 @@ object Bench {
     // rather than a fixed small number
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // Warm the session (codegen compiler, parquet footer reads, shuffle
     // machinery) so the first timed query doesn't absorb JVM startup.
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1,14 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop helper: time a subset of registered queries by name.
   * `tools/run_class.sh graft.BenchOne q_a q_b ...` (env
   * SPARK_GRAFT_SF_DIR selects the scale factor; default sf0.1).
   * Pass `--explain` first to also print the formatted physical plan.
-  * Pass `--dup-ckpt-compare` alone to time dupClusters in both
-  * checkpoint modes (local vs reliable dir) on the same pair graph —
-  * the cluster-grade path needs timing data too, not just a spec.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -16,35 +11,7 @@ object BenchOne {
     val names   = if (explain) args.drop(1) else args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (args.contains("--dup-ckpt-compare")) {
-      val docs = Tables.documents(spark, sfDir)
-      // pair graph built once, outside both timed regions — the
-      // comparison isolates the iteration's checkpoint mechanics
-      val pairs = ops.Text.jaccardExactPairs(docs, 0.5).persist()
-      System.err.println(s"[bench1] pair graph: ${pairs.count()} edges")
-      Seq(
-        "localCheckpoint" -> None,
-        "reliable-dir" -> Some(java.nio.file.Files
-          .createTempDirectory("graft-ckpt").toString)
-      ).foreach { case (label, dir) =>
-        val t0 = System.nanoTime()
-        val n = ops.Text.dupClusters(docs, pairs, checkpointDir = dir)
-          .count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[bench1] dup_clusters/$label%-22s $dt%8.2fs  rows=$n")
-        Caches.release("text")
-      }
-      spark.stop()
-      return
-    }
+    val spark = LocalSession(cpus)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (explain) fn(spark, sfDir).explain("formatted")

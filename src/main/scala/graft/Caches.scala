@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftx.Bridge
 
 /** Central registry for session-lifetime caches (persisted DataFrames
   * and fitted models), keyed by (family, key).
@@ -50,6 +51,27 @@ object Caches {
     */
   def trackReleasable(family: String)(hook: () => Unit): Unit =
     entries.put((family, ("track", trackIds.incrementAndGet())), hook)
+
+  /** Truncate `df` to a LAZY localCheckpoint (materialized by the
+    * caller's next action) whose leaf drops the inherited size
+    * estimate (see `Bridge.statsResetLeaf`), and register its blocks
+    * for `release(family)`.
+    */
+  def lazySnapshot(family: String, df: DataFrame): DataFrame =
+    releasedWith(family,
+      Bridge.statsResetLeaf(df.localCheckpoint(eager = false)))
+
+  /** Materialize `df` now as a localCheckpoint that keeps its size
+    * estimate, and register its blocks for `release(family)`.
+    */
+  def eagerSnapshot(family: String, df: DataFrame): DataFrame =
+    releasedWith(family, df.localCheckpoint(eager = true))
+
+  private def releasedWith(family: String, snap: DataFrame): DataFrame = {
+    trackReleasable(family)(() =>
+      Bridge.leafRdd(snap).foreach(_.unpersist(blocking = false)))
+    snap
+  }
 
   private def releaseKey(k: (String, Any)): Unit =
     entries.remove(k).foreach {

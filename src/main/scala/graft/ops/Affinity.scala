@@ -401,14 +401,10 @@ object Affinity {
       s"tPpm must be in [0, 1000000], got $tPpm")
     val qi = qiCols.map(col)
     // the single input scan; everything below derives from this leaf
-    val cls = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(
+    val cls = graft.Caches.lazySnapshot("kanon",
       df.filter(col(sensitiveCol).isNotNull)
         .groupBy((qi :+ col(sensitiveCol).as("__sens")): _*)
-        .agg(count(lit(1)).as("__ct"))
-        .localCheckpoint(eager = false))
-    graft.Caches.trackReleasable("kanon")(() =>
-      org.apache.spark.sql.graftx.Bridge.leafRdd(cls)
-        .foreach(_.unpersist(blocking = false)))
+        .agg(count(lit(1)).as("__ct")))
     val glob = cls.groupBy(col("__sens"))
       .agg(sum(col("__ct")).as("__gct"))
     val gshare = glob
@@ -564,18 +560,14 @@ object Affinity {
     }
     val clusters = raw.columns.find(_ == "block_token") match {
       case Some(_) if edgesConfined(raw) =>
-        // EAGER localCheckpoint (the dupClusters gate discipline,
-        // guide §3.3): componentSizeProfile reads the assignment
-        // twice (sizes feed the total AND the histogram) — lazy,
-        // the per-block union-find ran twice per action
-        val assign = Text.dupClustersPartitioned(ids, raw.select(
-          col("part_a").as("doc_a"), col("part_b").as("doc_b"),
-          xxhash64(col("block_token")).as("part")))
-          .localCheckpoint(true)
-        graft.Caches.trackReleasable(cacheFamily)(() =>
-          org.apache.spark.sql.graftx.Bridge.leafRdd(assign)
-            .foreach(_.unpersist(blocking = false)))
-        assign
+        // EAGER snapshot (the dupClusters gate discipline):
+        // componentSizeProfile reads the assignment twice (sizes
+        // feed the total AND the histogram) — lazy, the per-block
+        // union-find ran twice per action
+        graft.Caches.eagerSnapshot(cacheFamily,
+          Text.dupClustersPartitioned(ids, raw.select(
+            col("part_a").as("doc_a"), col("part_b").as("doc_b"),
+            xxhash64(col("block_token")).as("part"))))
       case _ =>
         Text.dupClusters(ids, raw.select(
           col("part_a").as("doc_a"), col("part_b").as("doc_b")),

@@ -336,14 +336,8 @@ object Layout {
     // ≤ nRanges·(coarseCells+1) rows — KB-sized blocks). The bounded
     // global windows stay OUTSIDE the snaps so PlanSpec's
     // empty-partition-Window guard still sees and adjudicates them.
-    def snap(d: DataFrame): DataFrame = {
-      val s = org.apache.spark.sql.graftx.Bridge
-        .statsResetLeaf(d.localCheckpoint(eager = false))
-      graft.Caches.trackReleasable("layout")(() =>
-        org.apache.spark.sql.graftx.Bridge.leafRdd(s)
-          .foreach(_.unpersist(blocking = false)))
-      s
-    }
+    def snap(d: DataFrame): DataFrame =
+      graft.Caches.lazySnapshot("layout", d)
     val key = col(keyCol).cast("long")
     val stats = snap(df.agg(
       min(key).as("minv"), max(key).as("maxv"),

@@ -1063,11 +1063,8 @@ object Text {
     // pass-2 legs); feed it a truncated doc_id-only frame so those
     // scans hit an 8-byte/row cached projection instead of
     // re-reading + re-trimming the text column each time
-    val ids = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(
-      ne.select(col("doc_id")).localCheckpoint(eager = false))
-    graft.Caches.trackReleasable("text")(() =>
-      org.apache.spark.sql.graftx.Bridge.leafRdd(ids)
-        .foreach(_.unpersist(blocking = false)))
+    val ids = graft.Caches.lazySnapshot("text",
+      ne.select(col("doc_id")))
     // nBuckets boundary doc_ids → one sorted array in a 1-row frame,
     // broadcast onto the doc scan; bucket = #{boundaries < doc_id}
     val barr = Layout
@@ -1453,9 +1450,35 @@ object Text {
   ): DataFrame = {
     // the ordered-shingle table feeds four plan legs (two prefix
     // self-join sides + two verify set fetches) — callers persist it
-    // so the shuffle-heavy ordering chain materializes once; the
-    // prefix length is this consumer's threshold-derived view
-    val orderedC = orderedShingleTable
+    // so the shuffle-heavy ordering chain materializes once
+    val cand = ppjoinCandidates(orderedShingleTable, Nil, threshold)
+    val sets = orderedShingleTable
+      .select(col("doc_id"), col("n"), col("toks_ord"))
+    cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("n").as("na"),
+        col("toks_ord").as("ta")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("n").as("nb"),
+        col("toks_ord").as("tb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("ta"), col("tb"))).as("inter"),
+        col("na"), col("nb"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** PPJoin candidate pairs `(keys…, doc_a, doc_b)`, `doc_a < doc_b`,
+    * deduplicated, over an ordered-shingle table (`doc_id`, `n`,
+    * `toks_ord` plus the `keys` columns): docs sharing a prefix token
+    * under the same `keys` that pass the length and position filters.
+    * Every filter is a necessary condition for jaccard ≥ `threshold`,
+    * so no qualifying pair is lost; callers verify the survivors.
+    */
+  private def ppjoinCandidates(ordered: DataFrame, keys: Seq[String],
+      threshold: Double): DataFrame = {
+    // the prefix length is the threshold-derived view of the table
+    val orderedC = ordered
       .withColumn("plen",
         (col("n") - ceil(lit(threshold) * col("n")) + 1).cast("int"))
     // candidates: ids only through the join; token arrays re-attached
@@ -1466,9 +1489,9 @@ object Text {
     // the join, before dedup and before any array_intersect runs
     // (measured at sf0.1: 409k → 310k candidates; a necessary
     // condition, so lossless by the same argument as the prefix)
-    val prefix = orderedC.select(col("doc_id"), col("n"),
-      posexplode(slice(col("toks_ord"), lit(1), col("plen")))
-        .as(Seq("p", "tok")))
+    val prefix = orderedC.select(keys.map(col) ++ Seq(col("doc_id"),
+      col("n"), posexplode(slice(col("toks_ord"), lit(1), col("plen")))
+        .as(Seq("p", "tok"))): _*)
     // PPJoin POSITION filter (r18 optimization, Xiao et al.; lossless
     // like the prefix and length filters): a shared prefix token at
     // 0-based positions (pa, pb) bounds the overlap by
@@ -1490,27 +1513,15 @@ object Text {
     // a threshold-boundary pair before verification
     val a = (lit(threshold) / (lit(1.0) + threshold)) *
       (col("a.n") + col("b.n")).cast("double")
-    val cand = prefix.as("a").join(prefix.as("b"), "tok")
+    prefix.as("a").join(prefix.as("b"), keys :+ "tok")
       .filter(col("a.doc_id") < col("b.doc_id") &&
         least(col("a.n"), col("b.n")).cast("double") >=
           lit(threshold) * greatest(col("a.n"), col("b.n")) &&
         (lit(1) + least(col("a.n") - col("a.p") - 1,
           col("b.n") - col("b.p") - 1)).cast("double") >= a)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val sets = orderedC.select(col("doc_id"), col("n"), col("toks_ord"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("n").as("na"),
-        col("toks_ord").as("ta")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("n").as("nb"),
-        col("toks_ord").as("tb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("ta"), col("tb"))).as("inter"),
-        col("na"), col("nb"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .select(keys.map(col) ++ Seq(col("a.doc_id").as("doc_a"),
+        col("b.doc_id").as("doc_b")): _*)
+      .dropDuplicates(keys ++ Seq("doc_a", "doc_b"))
   }
 
   /** Connected components over a near-duplicate pair graph: each doc
@@ -1518,8 +1529,8 @@ object Text {
     * cluster id — the step that turns pairwise dedup into dedup
     * GROUPS (keep one doc per cluster, not one per pair).
     *
-    * Small graphs (edge count ≤ `smallGraphEdgeMax` after
-    * materialization) route to the zero-iteration
+    * Graphs that fit one task ([[SingleTask.fits]] on the
+    * materialized edge count) route to the zero-iteration
     * [[dupClustersPartitioned]] union-find under a constant key —
     * identical fixpoint, one edge shuffle, no checkpoints (r19).
     * Larger graphs run iterative min-label propagation: label(v) ←
@@ -1554,50 +1565,26 @@ object Text {
       pairs: DataFrame,
       maxIter: Int = 64,
       checkpointDir: Option[String] = None,
-      cacheFamily: String = "text",
-      smallGraphEdgeMax: Long = 2000000L
+      cacheFamily: String = "text"
   ): DataFrame = {
     val spark = docs.sparkSession
-    // r19 small-graph fast path (guide §2.4 — remove shuffled rounds
-    // outright): dedup pair graphs are normally orders of magnitude
-    // smaller than the corpus, and when the materialized edge count
-    // fits one task's memory budget, connected components are ONE
-    // union-find pass over a single co-group
-    // ([[dupClustersPartitioned]] under a constant key — same unique
-    // min-reachable-id fixpoint, differentially pinned) instead of
-    // O(log diameter) rounds of graph-sized joins + checkpoint
-    // materializations + convergence counts. The pair set is
-    // persisted + registered under `cacheFamily` BEFORE counting, so
-    // the gate's materialization is reused by whichever path runs
-    // (for an already-persisted caller graph the count is a cached
-    // read). `smallGraphEdgeMax` is the scale lever, not a local-mode
-    // constant: 2 M edges ≈ tens of MB of LongMap state in the one
-    // union-find task; pass 0 to force the iterative path (the
-    // checkpointed cluster-grade loop), larger on fat executors.
+    // Single-task route: connected components are ONE union-find pass
+    // over a single co-group ([[dupClustersPartitioned]] under a
+    // constant key — the same unique min-reachable-id fixpoint,
+    // differentially pinned). The pair set is persisted + registered
+    // under `cacheFamily` BEFORE counting, so the probe's
+    // materialization is reused by whichever path runs. The result
+    // is an EAGER snapshot, like the iterative loop's per-round
+    // truncation: the assignment is consumed through anti-joins and
+    // unions by capstones that compose many more operators on top,
+    // and a lazy return glues the union-find subtree into every
+    // downstream action's analysis + execution (measured 12.5 s
+    // memo-warm prepare_semantic vs ~5 s truncated).
     val p = graft.Caches.track(cacheFamily,
       pairs.select(col("doc_a"), col("doc_b")))
-    if (p.count() <= smallGraphEdgeMax) {
-      // EAGER localCheckpoint, exactly like the iterative loop's
-      // per-round truncation: the assignment is consumed through
-      // anti-joins/unions by capstones that compose MANY more
-      // operators on top, and a lazy return glues this whole
-      // subtree (kept-docs scan, pair semi-joins, the MapGroups
-      // union-find) into every downstream action's analysis +
-      // execution — measured 12.5 s memo-warm prepare_semantic vs
-      // ~5 s with the truncated plan (guide §3.3: materialize to
-      // cut enormous plans). The checkpoint job itself is one pass
-      // over the docs-sized assignment.
-      val comps = partitionedComps(p.withColumn("part", lit(0L)))
-      val assign = docs.select(col("doc_id"))
-        .join(comps.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("doc_id").as("cluster"))
-        .union(comps)
-        .localCheckpoint(true)
-      graft.Caches.trackReleasable(cacheFamily)(() =>
-        org.apache.spark.sql.graftx.Bridge.leafRdd(assign)
-          .foreach(_.unpersist(blocking = false)))
-      return assign
-    }
+    if (SingleTask.fits(p.count()))
+      return graft.Caches.eagerSnapshot(cacheFamily,
+        dupClustersPartitioned(docs, p.withColumn("part", lit(0L))))
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     val debug = sys.env.contains("GRAFT_DEBUG")
     var tMark = System.nanoTime()
@@ -1768,28 +1755,15 @@ object Text {
       docs: DataFrame,
       pairsWithPart: DataFrame
   ): DataFrame = {
-    val comps = partitionedComps(pairsWithPart)
-    docs.select(col("doc_id"))
-      .join(comps.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster"))
-      .union(comps)
-  }
-
-  /** The graph-nodes half of [[dupClustersPartitioned]]: (doc_id,
-    * cluster) for every node with an incident edge — min reachable
-    * id via the per-`part` union-find. Callers append singletons
-    * themselves (or persist this table first when the assignment is
-    * read more than once).
-    */
-  def partitionedComps(pairsWithPart: DataFrame): DataFrame = {
     val spark = pairsWithPart.sparkSession
     import spark.implicits._
-    val edges = pairsWithPart
+    // graph nodes only: (doc_id, min reachable id) per `part` group
+    val comps = pairsWithPart
       .select(col("part").cast("long").as("_1"),
         col("doc_a").cast("long").as("_2"),
         col("doc_b").cast("long").as("_3"))
       .as[(Long, Long, Long)]
-    edges.groupByKey(_._1)
+      .groupByKey { case (part, _, _) => part }
       .flatMapGroups { (_, it) =>
         // local union-find: path-halving find, union by min root
         val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -1821,6 +1795,10 @@ object Text {
         nodes.iterator.map(n => (n, find(n)))
       }
       .toDF("doc_id", "cluster")
+    docs.select(col("doc_id"))
+      .join(comps.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("cluster"))
+      .union(comps)
   }
 
   /** Survivor selection over near-duplicate clusters — the policy
@@ -2135,26 +2113,9 @@ object Text {
         .as("o"))
       .select(col("doc_id"), col("w"), col("n"),
         transform(col("o"), _.getField("tok")).as("toks_ord")))
-    val orderedC = ord.withColumn("plen",
-      (col("n") - ceil(lit(threshold) * col("n")) + 1).cast("int"))
-    val prefix = orderedC.select(col("doc_id"), col("w"), col("n"),
-      posexplode(slice(col("toks_ord"), lit(1), col("plen")))
-        .as(Seq("p", "tok")))
-    // prefix + length + position filters — the jaccardPairsOverOrdered
-    // candidate discipline, keyed by (w, tok) so widths never mix
-    val alphaB = (lit(threshold) / (lit(1.0) + threshold)) *
-      (col("a.n") + col("b.n")).cast("double")
-    val cand = prefix.as("a").join(prefix.as("b"), Seq("w", "tok"))
-      .filter(col("a.doc_id") < col("b.doc_id") &&
-        least(col("a.n"), col("b.n")).cast("double") >=
-          lit(threshold) * greatest(col("a.n"), col("b.n")) &&
-        // un-ceiled bound per the jaccardPairsOverOrdered note (r19)
-        (lit(1) + least(col("a.n") - col("a.p") - 1,
-          col("b.n") - col("b.p") - 1)).cast("double") >= alphaB)
-      .select(col("w"), col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"))
-      .dropDuplicates("w", "doc_a", "doc_b")
-    val sets = orderedC.select(col("w"), col("doc_id"), col("n"),
+    // keyed by w so widths never mix
+    val cand = ppjoinCandidates(ord, Seq("w"), threshold)
+    val sets = ord.select(col("w"), col("doc_id"), col("n"),
       col("toks_ord"))
     val pairs = graft.Caches.track("text", cand
       .join(sets.select(col("w"), col("doc_id").as("doc_a"),
@@ -2334,6 +2295,9 @@ object Text {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
+  /** Cells of the seqPatterns dense triple-support array (16 MiB). */
+  private val denseTripleCells = 2097152L
+
   /** Sequential pattern mining, GSP-style (Srikant & Agrawal): all
     * length-3 token patterns `a‥b‥c` (order matters, gaps allowed)
     * contained in at least `minSupportPpm` of the corpus's documents
@@ -2363,8 +2327,8 @@ object Text {
     *
     * r19 dense-count gate (the bfsDepths/bpeLearnMerges discipline):
     * |F1| = K is vocab-bounded (sup ≥ θ·n ⇒ K ≤ L̄/θ at ANY corpus
-    * size), so when K³ fits a dense long array
-    * (`denseTripleMax`, 0 disables) the whole triple-support table
+    * size), so when K³ fits a dense array of 2²¹ longs (off when
+    * [[SingleTask.maxRows]] is ≤ 0) the whole triple-support table
     * is accumulated in ONE mapPartitions pass over the doc-grouped
     * positions frame — per doc, per ordered (a,b) pair with
     * `mx(b) > mn(a)`, the qualifying third tokens are exactly the
@@ -2382,8 +2346,7 @@ object Text {
     */
   def seqPatterns(
       docs: DataFrame,
-      minSupportPpm: Long = 350000L,
-      denseTripleMax: Long = 2097152L
+      minSupportPpm: Long = 350000L
   ): DataFrame = {
     require(minSupportPpm >= 1 && minSupportPpm <= 1000000,
       s"minSupportPpm in [1, 1000000], got $minSupportPpm")
@@ -2456,9 +2419,9 @@ object Text {
     // count() job reuses the one corpus pass the scoring needs
     // anyway; the grouping adds NO exchange — mm is already
     // hash-partitioned by doc_id)
-    val k = if (denseTripleMax > 0) f1.count() else Long.MaxValue
-    if (k > 0 && k <= 1290 &&
-        k * k * k <= math.min(denseTripleMax, Int.MaxValue.toLong)) {
+    lazy val k = f1.count()
+    if (SingleTask.fits(k) && k > 0 && k <= 1290 &&
+        k * k * k <= denseTripleCells) {
       val kk = k.toInt
       val spark = docs.sparkSession
       import spark.implicits._
@@ -4666,8 +4629,7 @@ object Text {
   def bpeLearnMerges(
       docs: DataFrame,
       nMerges: Int = 20,
-      minCount: Long = 2L,
-      smallVocabMax: Long = 1000000L
+      minCount: Long = 2L
   ): DataFrame = {
     require(nMerges >= 1, s"nMerges must be positive, got $nMerges")
     val spark = docs.sparkSession
@@ -4693,19 +4655,14 @@ object Text {
     // small vocabulary to ONE task per round while a web-scale
     // distinct-word table still fans out
     val nWords = words.count()
-    // r19 small-vocab fast path (the dupClusters-gate discipline):
-    // when the distinct-word table fits one task's memory budget,
-    // ALL nMerges rounds run inside ONE co-group task — the
-    // sequential argmax loop over an in-memory (n, seg) array with
-    // the exact fuseMerge fold and the exact (cnt desc, l, r)
-    // UTF-8-bytewise tie-break — instead of nMerges job launches
-    // (each a full Spark job for a one-task round; measured ~3.5 s
-    // of almost pure scheduling at a 92-word vocab). The ≤ nMerges
-    // merge rows come back as a driver-local frame, exactly the
-    // model-sized collect bpeEncode already does. Pass 0 to force
-    // the per-round job loop (the web-scale path: a billion-word
-    // table fans each round out instead).
-    if (nWords <= smallVocabMax) {
+    // Single-task route (a word probes as 2 rows, see SingleTask):
+    // ALL nMerges rounds run inside ONE task — the sequential argmax
+    // loop over an in-memory (n, seg) array with the exact fuseMerge
+    // fold and the exact (cnt desc, l, r) UTF-8-bytewise tie-break, so
+    // the merge table is identical to the per-round job loop's. The
+    // ≤ nMerges merge rows come back as a driver-local frame, exactly
+    // the model-sized collect bpeEncode already does.
+    if (SingleTask.fits(2L * nWords)) {
       import spark.implicits._
       // UTF-8 bytewise < — Spark's string ordering, NOT UTF-16
       // compareTo (they diverge above the BMP)
@@ -4719,62 +4676,59 @@ object Text {
         }
         x.length < y.length
       }
-      val merged = words.select(col("n"), col("seg"))
-        .as[(Long, Seq[String])]
-        .groupByKey(_ => 0L)
-        .flatMapGroups { (_, it) =>
-          val data = it.map { case (n, seg) =>
-            (n, scala.collection.mutable.ArrayBuffer(seg: _*))
-          }.toArray
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, String, String, Long)]
-          var round = 1
-          var done = false
-          while (round <= nMerges && !done) {
-            val cnt = scala.collection.mutable
-              .HashMap.empty[(String, String), Long]
-            data.foreach { case (n, seg) =>
-              var i = 0
-              while (i + 1 < seg.length) {
-                val k = (seg(i), seg(i + 1))
-                cnt(k) = cnt.getOrElse(k, 0L) + n
-                i += 1
-              }
-            }
-            if (cnt.isEmpty) done = true
-            else {
-              var bk: (String, String) = null
-              var bc = Long.MinValue
-              cnt.foreach { case (k, c) =>
-                if (bk == null || c > bc || (c == bc &&
-                    (u8lt(k._1, bk._1) || (k._1 == bk._1 &&
-                      u8lt(k._2, bk._2))))) {
-                  bk = k; bc = c
-                }
-              }
-              if (bc < minCount) done = true
-              else {
-                out += ((round, bk._1, bk._2, bc))
-                val (l, r) = bk
-                data.foreach { case (_, seg) =>
-                  // the fuseMerge fold: greedy left-to-right, the
-                  // fused token becomes the new left context
-                  val acc = scala.collection.mutable
-                    .ArrayBuffer.empty[String]
-                  seg.foreach { s =>
-                    if (acc.nonEmpty && acc.last == l && s == r)
-                      acc(acc.length - 1) = acc.last + s
-                    else acc += s
-                  }
-                  seg.clear(); seg ++= acc
-                }
-                round += 1
-              }
+      val merged = SingleTask.run(words.select(col("n"), col("seg"))
+        .as[(Long, Seq[String])]) { it =>
+        val data = it.map { case (n, seg) =>
+          (n, scala.collection.mutable.ArrayBuffer(seg: _*))
+        }.toArray
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, String, String, Long)]
+        var round = 1
+        var done = false
+        while (round <= nMerges && !done) {
+          val cnt = scala.collection.mutable
+            .HashMap.empty[(String, String), Long]
+          data.foreach { case (n, seg) =>
+            var i = 0
+            while (i + 1 < seg.length) {
+              val k = (seg(i), seg(i + 1))
+              cnt(k) = cnt.getOrElse(k, 0L) + n
+              i += 1
             }
           }
-          out.iterator
+          if (cnt.isEmpty) done = true
+          else {
+            var bk: (String, String) = null
+            var bc = Long.MinValue
+            cnt.foreach { case (k, c) =>
+              if (bk == null || c > bc || (c == bc &&
+                  (u8lt(k._1, bk._1) || (k._1 == bk._1 &&
+                    u8lt(k._2, bk._2))))) {
+                bk = k; bc = c
+              }
+            }
+            if (bc < minCount) done = true
+            else {
+              out += ((round, bk._1, bk._2, bc))
+              val (l, r) = bk
+              data.foreach { case (_, seg) =>
+                // the fuseMerge fold: greedy left-to-right, the
+                // fused token becomes the new left context
+                val acc = scala.collection.mutable
+                  .ArrayBuffer.empty[String]
+                seg.foreach { s =>
+                  if (acc.nonEmpty && acc.last == l && s == r)
+                    acc(acc.length - 1) = acc.last + s
+                  else acc += s
+                }
+                seg.clear(); seg ++= acc
+              }
+              round += 1
+            }
+          }
         }
-        .collect()
+        out.iterator
+      }.collect()
       releaseSnapshot(words)
       return spark.createDataFrame(merged.toSeq)
         .toDF("merge_rank", "left", "right", "pair_count")

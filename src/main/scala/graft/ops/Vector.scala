@@ -2207,8 +2207,7 @@ object Vector {
       k: Int = 3,
       iters: Int = 3,
       topN: Int = 25,
-      precomputedKnn: Option[DataFrame] = None,
-      smallGraphEdgeMax: Long = 2000000L
+      precomputedKnn: Option[DataFrame] = None
   ): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
     require(topN >= 1, s"topN must be positive, got $topN")
@@ -2216,67 +2215,61 @@ object Vector {
       precomputedKnn.getOrElse(knnGraphAssigned(assigned, k))
         .select(col("vec_id").as("src"), col("nbr_id").as("dst")))
     val nodes = assigned.select(col("vec_id"))
-    // r19 single-task gate (the bfsDepths discipline, guide §2.4):
-    // the kNN edge list is k·n rows — when the materialized count
-    // fits one task (`smallGraphEdgeMax`, 0 disables), all `iters`
-    // rounds of the q20 fixpoint run inside one co-group instead of
-    // iters × (join + agg + left-join) Spark rounds. Identical mass:
+    // Single-task route on the kNN edge count: all `iters` rounds of
+    // the q20 fixpoint run in one task instead of iters × (join +
+    // agg + left-join) Spark rounds. Identical mass:
     // the recurrence is integer sums and floor-divs of non-negative
     // longs (order-independent, Scala `/` ≡ Spark `div` on
     // non-negatives), mass is restricted to `nodes` each round
     // exactly as the left-join form does, and the seed's restart
     // mass applies only when the seed is a node. Differential test
     // in VectorSpec pins gate ≡ iterative.
-    if (smallGraphEdgeMax > 0 && edges.count() <= smallGraphEdgeMax) {
+    if (SingleTask.fits(edges.count())) {
       val spark = assigned.sparkSession
       import spark.implicits._
-      val massDf = edges
-        .select(lit(0L).as("g"), lit(0).as("t"),
-          col("src"), col("dst"))
-        .unionAll(nodes.select(lit(0L).as("g"), lit(1).as("t"),
+      val massDf = SingleTask.run(edges
+        .select(lit(0).as("t"), col("src"), col("dst"))
+        .unionAll(nodes.select(lit(1).as("t"),
           col("vec_id").as("src"), lit(0L).as("dst")))
-        .as[(Long, Int, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          val esrc = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val edst = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val deg = scala.collection.mutable.LongMap.empty[Long]
-          val nodeSet = scala.collection.mutable.HashSet.empty[Long]
-          it.foreach { case (_, t, s, d) =>
-            if (t == 1) nodeSet += s
-            else {
-              esrc += s; edst += d
-              deg(s) = deg.getOrElse(s, 0L) + 1L
-            }
+        .as[(Int, Long, Long)]) { it =>
+        val esrc = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val edst = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val deg = scala.collection.mutable.LongMap.empty[Long]
+        val nodeSet = scala.collection.mutable.HashSet.empty[Long]
+        it.foreach { case (t, s, d) =>
+          if (t == 1) nodeSet += s
+          else {
+            esrc += s; edst += d
+            deg(s) = deg.getOrElse(s, 0L) + 1L
           }
-          var pr = scala.collection.mutable.LongMap.empty[Long]
-          if (nodeSet.contains(seedId)) pr(seedId) = 1048576L
-          for (_ <- 1 to iters) {
-            val s = scala.collection.mutable.LongMap.empty[Long]
-            var i = 0
-            while (i < esrc.length) {
-              val m = pr.getOrElse(esrc(i), 0L)
-              if (m != 0L) {
-                val c = m / deg(esrc(i))
-                if (c != 0L)
-                  s(edst(i)) = s.getOrElse(edst(i), 0L) + c
-              }
-              i += 1
-            }
-            val next = scala.collection.mutable.LongMap.empty[Long]
-            s.foreach { case (v, sv) =>
-              if (nodeSet.contains(v) && v != seedId) {
-                val m = (17L * sv) / 20L
-                if (m != 0L) next(v) = m
-              }
-            }
-            if (nodeSet.contains(seedId))
-              next(seedId) = 157286L + (17L * s.getOrElse(seedId, 0L)) / 20L
-            pr = next
-          }
-          pr.iterator
         }
-        .toDF("vec_id", "m")
+        var pr = scala.collection.mutable.LongMap.empty[Long]
+        if (nodeSet.contains(seedId)) pr(seedId) = 1048576L
+        for (_ <- 1 to iters) {
+          val s = scala.collection.mutable.LongMap.empty[Long]
+          var i = 0
+          while (i < esrc.length) {
+            val m = pr.getOrElse(esrc(i), 0L)
+            if (m != 0L) {
+              val c = m / deg(esrc(i))
+              if (c != 0L)
+                s(edst(i)) = s.getOrElse(edst(i), 0L) + c
+            }
+            i += 1
+          }
+          val next = scala.collection.mutable.LongMap.empty[Long]
+          s.foreach { case (v, sv) =>
+            if (nodeSet.contains(v) && v != seedId) {
+              val m = (17L * sv) / 20L
+              if (m != 0L) next(v) = m
+            }
+          }
+          if (nodeSet.contains(seedId))
+            next(seedId) = 157286L + (17L * s.getOrElse(seedId, 0L)) / 20L
+          pr = next
+        }
+        pr.iterator
+      }.toDF("vec_id", "m")
       val prFull = nodes
         .join(massDf, Seq("vec_id"), "left")
         .select(col("vec_id"),
@@ -2379,12 +2372,7 @@ object Vector {
     // every generation and Catalyst's BigInt stats walk turns
     // iteration superlinear (the dupClusters r11 lesson; label_prop
     // measured alpha 1.4 at ScaleBench k=10 before this)
-    val snapped = org.apache.spark.sql.graftx.Bridge
-      .statsResetLeaf(df.localCheckpoint(eager = false))
-    graft.Caches.trackReleasable("vec")(() =>
-      org.apache.spark.sql.graftx.Bridge.leafRdd(snapped)
-        .foreach(_.unpersist(blocking = false)))
-    snapped
+    graft.Caches.lazySnapshot("vec", df)
   }
 
   /** Centrality-ranked duplicate-cluster representative selection:
@@ -2901,6 +2889,15 @@ object Vector {
       .select(col("vec_id"), array(comps: _*).as("proj"))
   }
 
+  /** The undirected support pairs of a kNN graph — one `(a, b)` row
+    * per edge, `a < b` — persisted for the vec-family release.
+    */
+  private def undirectedEdges(knn: DataFrame): DataFrame =
+    graft.Caches.track("vec", knn
+      .select(least(col("vec_id"), col("nbr_id")).as("a"),
+        greatest(col("vec_id"), col("nbr_id")).as("b"))
+      .distinct())
+
   /** Local clustering coefficient over the within-list kNN graph —
     * the graph-density quality signal that complements
     * [[knnPagerankAssigned]] (centrality says "how connected"; the
@@ -2923,11 +2920,8 @@ object Vector {
       assigned: DataFrame,
       k: Int,
       precomputedKnn: Option[DataFrame] = None): DataFrame = {
-    val und = graft.Caches.track("vec",
-      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k))
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct())
+    val und = undirectedEdges(
+      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k)))
     val deg = und.select(col("a").as("v"))
       .unionAll(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("degree"))
@@ -2947,6 +2941,74 @@ object Vector {
         when(col("degree") >= 2,
           expr("(2000000 * n_tri) div (degree * (degree - 1))"))
           .otherwise(lit(0L)))
+  }
+
+  /** Σ deg² over the undirected edge set — the upper bound on the
+    * two-path expansion the link-prediction operators enumerate. One
+    * small aggregate over the session-persisted edge frame.
+    */
+  private def twoPathWork(und: DataFrame): Long = {
+    val r = und.select(col("a").as("v"))
+      .unionAll(und.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("d"))
+      .agg(coalesce(sum(col("d") * col("d")), lit(0L)).as("w"))
+      .collect()
+    if (r.isEmpty || r.head.isNullAt(0)) 0L else r.head.getLong(0)
+  }
+
+  /** Whether [[commonNeighbours]] over `und` fits one task: the edge
+    * set within [[SingleTask.maxRows]] AND the two-path expansion
+    * Σ deg² — what the task actually enumerates; a single hub makes
+    * it ≫ |edges| — within 4× that (Σ deg² ≤ 4·cap ⟺ ⌈Σ deg²/4⌉ ≤ cap).
+    */
+  private def commonNeighboursFit(und: DataFrame): Boolean =
+    SingleTask.fits(und.count()) &&
+      SingleTask.fits((twoPathWork(und) + 3) / 4)
+
+  /** Every non-edge two-hop pair `va < vb` of the undirected edge set
+    * `und`, enumerated in memory in one task: `common_nbrs`,
+    * `ra_micro` (Σ over common neighbours z of ⌊10⁶/deg z⌋) and both
+    * degrees. Each unordered neighbour pair of each middle vertex is
+    * counted exactly once, existing edges are skipped, and every sum
+    * is of non-negative integers in any order, so the rows equal the
+    * join pipelines' of [[linkPredictionAssigned]] and
+    * [[resourceAllocationLinkPred]], which project from it.
+    */
+  private def commonNeighbours(und: DataFrame): DataFrame = {
+    val spark = und.sparkSession
+    import spark.implicits._
+    import scala.collection.mutable
+    SingleTask.run(und.select(col("a"), col("b")).as[(Long, Long)]) { it =>
+      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+      val edgeSet = mutable.HashSet.empty[(Long, Long)]
+      def add(u: Long, v: Long): Unit =
+        adj.getOrElseUpdate(u, mutable.ArrayBuffer.empty[Long]) += v
+      it.foreach { case (a, b) =>
+        add(a, b); add(b, a); edgeSet += ((a, b))
+      }
+      // (common count, RA share sum) per pair: one lookup per two-path
+      val acc = mutable.HashMap.empty[(Long, Long), Array[Long]]
+      adj.foreach { case (_, ns) =>
+        val share = 1000000L / ns.length
+        var i = 0
+        while (i < ns.length) {
+          var j = i + 1
+          while (j < ns.length) {
+            val x = ns(i); val y = ns(j)
+            val c = acc.getOrElseUpdate(if (x < y) (x, y) else (y, x),
+              new Array[Long](2))
+            c(0) += 1L; c(1) += share
+            j += 1
+          }
+          i += 1
+        }
+      }
+      acc.iterator.collect {
+        case ((va, vb), c) if !edgeSet((va, vb)) =>
+          (va, vb, c(0), c(1), adj(va).length.toLong,
+            adj(vb).length.toLong)
+      }
+    }.toDF("va", "vb", "common_nbrs", "ra_micro", "deg_a", "deg_b")
   }
 
   /** Common-neighbor link prediction over the within-list kNN graph —
@@ -2970,108 +3032,36 @@ object Vector {
     * filter is a broadcast-able anti join on the edge set; the
     * top-N is TakeOrdered (no global sort).
     */
-  /** Σ deg² over the undirected edge set — the upper bound on the
-    * two-path expansion the link-prediction operators enumerate (a
-    * single hub makes it ≫ |edges|, so the single-task gates bound
-    * it explicitly rather than trusting the edge count alone). One
-    * small aggregate over the session-persisted edge frame.
-    */
-  private def twoPathWork(und: DataFrame): Long = {
-    val r = und.select(col("a").as("v"))
-      .unionAll(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      .agg(coalesce(sum(col("d") * col("d")), lit(0L)).as("w"))
-      .collect()
-    if (r.isEmpty || r.head.isNullAt(0)) 0L else r.head.getLong(0)
-  }
-
   def linkPredictionAssigned(
       assigned: DataFrame,
       k: Int,
       topN: Int = 100,
-      precomputedKnn: Option[DataFrame] = None,
-      smallGraphEdgeMax: Long = 2000000L): DataFrame = {
+      precomputedKnn: Option[DataFrame] = None): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val und = graft.Caches.track("vec",
-      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k))
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct())
-    // r19 single-task gate: when the edge set fits one task AND the
-    // two-path expansion Σ deg² is bounded (a hub could make Σ deg²
-    // ≫ edges — the expansion size is what the task actually
-    // enumerates, so it is what gets gated; both checks are cheap
-    // aggs over the persisted edge set, 0 disables), the whole
-    // common-neighbor count runs in memory in one co-group instead
-    // of the sym self-join + anti-join + two degree joins. Identical
-    // pairs: each unordered neighbor pair of each middle vertex is
-    // counted exactly once (va < vb), existing edges skipped, and
-    // the jaccard div is on non-negative integers. Differential
-    // test in VectorSpec pins gate ≡ join pipeline.
-    if (smallGraphEdgeMax > 0 && und.count() <= smallGraphEdgeMax &&
-        twoPathWork(und) <= 4L * smallGraphEdgeMax) {
-      val spark = assigned.sparkSession
-      import spark.implicits._
-      return und.select(lit(0L).as("g"), col("a"), col("b"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          val adj = scala.collection.mutable
-            .LongMap.empty[scala.collection.mutable.ArrayBuffer[Long]]
-          val edgeSet = scala.collection.mutable
-            .HashSet.empty[(Long, Long)]
-          def add(u: Long, v: Long): Unit =
-            adj.getOrElseUpdate(u, scala.collection.mutable
-              .ArrayBuffer.empty[Long]) += v
-          it.foreach { case (_, a, b) =>
-            add(a, b); add(b, a); edgeSet += ((a, b))
-          }
-          val common = scala.collection.mutable
-            .HashMap.empty[(Long, Long), Long]
-          adj.foreach { case (_, ns) =>
-            var i = 0
-            while (i < ns.length) {
-              var j = i + 1
-              while (j < ns.length) {
-                val x = ns(i); val y = ns(j)
-                val key = if (x < y) (x, y) else (y, x)
-                common(key) = common.getOrElse(key, 0L) + 1L
-                j += 1
-              }
-              i += 1
-            }
-          }
-          common.iterator.collect {
-            case ((va, vb), c) if !edgeSet((va, vb)) =>
-              (va, vb, c, adj(va).length.toLong,
-                adj(vb).length.toLong)
-          }
-        }
-        .toDF("va", "vb", "common_nbrs", "deg_a", "deg_b")
-        .select(col("va").as("vec_a"), col("vb").as("vec_b"),
-          col("common_nbrs"), col("deg_a"), col("deg_b"),
-          expr("common_nbrs * 1000000 div " +
-            "(deg_a + deg_b - common_nbrs)").as("jaccard_ppm"))
-        .orderBy(col("common_nbrs").desc, col("jaccard_ppm").desc,
-          col("vec_a"), col("vec_b"))
-        .limit(topN)
+    val und = undirectedEdges(
+      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k)))
+    // Single-task route: the common-neighbour count runs in memory
+    // (identical pairs, see [[commonNeighbours]]) instead of the sym
+    // self-join + anti-join + two degree joins. Differential test in
+    // VectorSpec pins both routes.
+    val cand = if (commonNeighboursFit(und)) commonNeighbours(und) else {
+      val sym = und.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(und.select(col("b").as("v"), col("a").as("w")))
+      val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("degree"))
+      val two = sym.as("e1")
+        .join(sym.as("e2"), col("e1.w") === col("e2.v") &&
+          col("e1.v") < col("e2.w"))
+        .select(col("e1.v").as("va"), col("e2.w").as("vb"))
+        .groupBy(col("va"), col("vb"))
+        .agg(count(lit(1)).as("common_nbrs"))
+      two.join(und,
+          col("va") === col("a") && col("vb") === col("b"), "left_anti")
+        .join(deg.select(col("v").as("va"), col("degree").as("deg_a")),
+          "va")
+        .join(deg.select(col("v").as("vb"), col("degree").as("deg_b")),
+          "vb")
     }
-    val sym = und.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(und.select(col("b").as("v"), col("a").as("w")))
-    val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("degree"))
-    val two = sym.as("e1")
-      .join(sym.as("e2"), col("e1.w") === col("e2.v") &&
-        col("e1.v") < col("e2.w"))
-      .select(col("e1.v").as("va"), col("e2.w").as("vb"))
-      .groupBy(col("va"), col("vb"))
-      .agg(count(lit(1)).as("common_nbrs"))
-    val cand = two.join(und,
-      col("va") === col("a") && col("vb") === col("b"), "left_anti")
     cand
-      .join(deg.select(col("v").as("va"), col("degree").as("deg_a")),
-        "va")
-      .join(deg.select(col("v").as("vb"), col("degree").as("deg_b")),
-        "vb")
       .select(col("va").as("vec_a"), col("vb").as("vec_b"),
         col("common_nbrs"), col("deg_a"), col("deg_b"),
         expr("common_nbrs * 1000000 div " +
@@ -3103,83 +3093,31 @@ object Vector {
       assigned: DataFrame,
       k: Int,
       topN: Int = 100,
-      precomputedKnn: Option[DataFrame] = None,
-      smallGraphEdgeMax: Long = 2000000L): DataFrame = {
+      precomputedKnn: Option[DataFrame] = None): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val und = graft.Caches.track("vec",
-      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k))
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct())
-    // r19 single-task gate — same conditions and identical-pairs
-    // argument as linkPredictionAssigned; the RA share of a middle
-    // vertex z is the integer floor(10⁶/deg z), summed per pair in
-    // any order. Differential test in VectorSpec.
-    if (smallGraphEdgeMax > 0 && und.count() <= smallGraphEdgeMax &&
-        twoPathWork(und) <= 4L * smallGraphEdgeMax) {
-      val spark = assigned.sparkSession
-      import spark.implicits._
-      return und.select(lit(0L).as("g"), col("a"), col("b"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          val adj = scala.collection.mutable
-            .LongMap.empty[scala.collection.mutable.ArrayBuffer[Long]]
-          val edgeSet = scala.collection.mutable
-            .HashSet.empty[(Long, Long)]
-          def add(u: Long, v: Long): Unit =
-            adj.getOrElseUpdate(u, scala.collection.mutable
-              .ArrayBuffer.empty[Long]) += v
-          it.foreach { case (_, a, b) =>
-            add(a, b); add(b, a); edgeSet += ((a, b))
-          }
-          val common = scala.collection.mutable
-            .HashMap.empty[(Long, Long), Long]
-          val ra = scala.collection.mutable
-            .HashMap.empty[(Long, Long), Long]
-          adj.foreach { case (_, ns) =>
-            val share = 1000000L / ns.length
-            var i = 0
-            while (i < ns.length) {
-              var j = i + 1
-              while (j < ns.length) {
-                val x = ns(i); val y = ns(j)
-                val key = if (x < y) (x, y) else (y, x)
-                common(key) = common.getOrElse(key, 0L) + 1L
-                ra(key) = ra.getOrElse(key, 0L) + share
-                j += 1
-              }
-              i += 1
-            }
-          }
-          common.iterator.collect {
-            case ((va, vb), c) if !edgeSet((va, vb)) =>
-              (va, vb, c, ra((va, vb)))
-          }
-        }
-        .toDF("va", "vb", "common_nbrs", "ra_micro")
-        .select(col("va").as("vec_a"), col("vb").as("vec_b"),
-          col("common_nbrs"), col("ra_micro"))
-        .orderBy(col("ra_micro").desc, col("common_nbrs").desc,
-          col("vec_a"), col("vec_b"))
-        .limit(topN)
+    val und = undirectedEdges(
+      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k)))
+    // Single-task route: same enumeration and identical-pairs
+    // argument as linkPredictionAssigned. Differential test in
+    // VectorSpec.
+    val cand = if (commonNeighboursFit(und)) commonNeighbours(und) else {
+      val sym = und.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(und.select(col("b").as("v"), col("a").as("w")))
+      val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("degree"))
+      sym.as("e1")
+        .join(sym.as("e2"), col("e1.w") === col("e2.v") &&
+          col("e1.v") < col("e2.w"))
+        .select(col("e1.v").as("va"), col("e1.w").as("z"),
+          col("e2.w").as("vb"))
+        .join(deg.select(col("v").as("z"), col("degree").as("deg_z")),
+          "z")
+        .groupBy(col("va"), col("vb"))
+        .agg(count(lit(1)).as("common_nbrs"),
+          sum(expr("1000000 div deg_z")).as("ra_micro"))
+        .join(und, col("va") === col("a") && col("vb") === col("b"),
+          "left_anti")
     }
-    val sym = und.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(und.select(col("b").as("v"), col("a").as("w")))
-    val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("degree"))
-    val two = sym.as("e1")
-      .join(sym.as("e2"), col("e1.w") === col("e2.v") &&
-        col("e1.v") < col("e2.w"))
-      .select(col("e1.v").as("va"), col("e1.w").as("z"),
-        col("e2.w").as("vb"))
-      .join(deg.select(col("v").as("z"), col("degree").as("deg_z")),
-        "z")
-      .groupBy(col("va"), col("vb"))
-      .agg(count(lit(1)).as("common_nbrs"),
-        sum(expr("1000000 div deg_z")).as("ra_micro"))
-    two
-      .join(und, col("va") === col("a") && col("vb") === col("b"),
-        "left_anti")
+    cand
       .select(col("va").as("vec_a"), col("vb").as("vec_b"),
         col("common_nbrs"), col("ra_micro"))
       .orderBy(col("ra_micro").desc, col("common_nbrs").desc,
@@ -3211,64 +3149,54 @@ object Vector {
       k: Int = 3,
       coreK: Int = 2,
       rounds: Int = 3,
-      precomputedKnn: Option[DataFrame] = None,
-      smallGraphEdgeMax: Long = 2000000L
+      precomputedKnn: Option[DataFrame] = None
   ): DataFrame = {
     require(coreK >= 1, s"coreK must be positive, got $coreK")
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    var edges = graft.Caches.track("vec",
-      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k))
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct())
-    // r19 single-task gate (the bfsDepths discipline): when the
-    // distinct undirected edge set fits one task
-    // (`smallGraphEdgeMax`, 0 disables), all `rounds` peel rounds
-    // run in memory in one co-group — no per-round degree shuffles,
-    // no per-round localCheckpoints. Identical peel: each round
-    // keeps exactly the edges whose BOTH endpoints hold degree ≥
-    // coreK on the surviving set (pure integer counting).
+    var edges = undirectedEdges(
+      precomputedKnn.getOrElse(knnGraphAssigned(assigned, k)))
+    // Single-task route on the undirected edge count: all `rounds`
+    // peel rounds run in memory in one task — no per-round degree
+    // shuffles, no per-round localCheckpoints. Identical peel: each
+    // round keeps exactly the edges whose BOTH endpoints hold degree
+    // ≥ coreK on the surviving set (pure integer counting).
     // Differential test in VectorSpec pins gate ≡ iterative.
-    if (smallGraphEdgeMax > 0 && edges.count() <= smallGraphEdgeMax) {
+    if (SingleTask.fits(edges.count())) {
       val spark = assigned.sparkSession
       import spark.implicits._
-      val degF = edges
-        .select(lit(0L).as("g"), col("a"), col("b"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          var ea = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var eb = scala.collection.mutable.ArrayBuffer.empty[Long]
-          it.foreach { case (_, a, b) => ea += a; eb += b }
-          for (_ <- 1 to rounds) {
-            val deg = scala.collection.mutable.LongMap.empty[Long]
-            var i = 0
-            while (i < ea.length) {
-              deg(ea(i)) = deg.getOrElse(ea(i), 0L) + 1L
-              deg(eb(i)) = deg.getOrElse(eb(i), 0L) + 1L
-              i += 1
-            }
-            val na = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val nb = scala.collection.mutable.ArrayBuffer.empty[Long]
-            i = 0
-            while (i < ea.length) {
-              if (deg(ea(i)) >= coreK && deg(eb(i)) >= coreK) {
-                na += ea(i); nb += eb(i)
-              }
-              i += 1
-            }
-            ea = na; eb = nb
-          }
-          val degFinal = scala.collection.mutable.LongMap.empty[Long]
+      val degF = SingleTask.run(
+          edges.select(col("a"), col("b")).as[(Long, Long)]) { it =>
+        var ea = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var eb = scala.collection.mutable.ArrayBuffer.empty[Long]
+        it.foreach { case (a, b) => ea += a; eb += b }
+        for (_ <- 1 to rounds) {
+          val deg = scala.collection.mutable.LongMap.empty[Long]
           var i = 0
           while (i < ea.length) {
-            degFinal(ea(i)) = degFinal.getOrElse(ea(i), 0L) + 1L
-            degFinal(eb(i)) = degFinal.getOrElse(eb(i), 0L) + 1L
+            deg(ea(i)) = deg.getOrElse(ea(i), 0L) + 1L
+            deg(eb(i)) = deg.getOrElse(eb(i), 0L) + 1L
             i += 1
           }
-          degFinal.iterator
+          val na = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val nb = scala.collection.mutable.ArrayBuffer.empty[Long]
+          i = 0
+          while (i < ea.length) {
+            if (deg(ea(i)) >= coreK && deg(eb(i)) >= coreK) {
+              na += ea(i); nb += eb(i)
+            }
+            i += 1
+          }
+          ea = na; eb = nb
         }
-        .toDF("vec_id", "core_degree")
+        val degFinal = scala.collection.mutable.LongMap.empty[Long]
+        var i = 0
+        while (i < ea.length) {
+          degFinal(ea(i)) = degFinal.getOrElse(ea(i), 0L) + 1L
+          degFinal(eb(i)) = degFinal.getOrElse(eb(i), 0L) + 1L
+          i += 1
+        }
+        degFinal.iterator
+      }.toDF("vec_id", "core_degree")
       return assigned.select(col("vec_id"))
         .join(degF, Seq("vec_id"), "left")
         .select(col("vec_id"),
@@ -3878,12 +3806,8 @@ object Vector {
       assigned: DataFrame,
       k: Int,
       precomputedKnn: Option[DataFrame] = None): DataFrame = {
-    val und = graft.Caches.track("vec",
-      precomputedKnn.getOrElse(
-          knnGraphAssigned(assigned.drop("community"), k))
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct())
+    val und = undirectedEdges(precomputedKnn.getOrElse(
+      knnGraphAssigned(assigned.drop("community"), k)))
     val comm = assigned.select(col("vec_id"), col("community"))
     val m = und.agg(count(lit(1)).as("m"))
     // vertex degrees on the symmetrized graph, with communities
@@ -3985,10 +3909,7 @@ object Vector {
     * small self-join on the k·n edge list, never the n² build.
     */
   def degreeAssortativity(knn: DataFrame): DataFrame = {
-    val und = graft.Caches.track("vec", knn
-      .select(least(col("vec_id"), col("nbr_id")).as("a"),
-        greatest(col("vec_id"), col("nbr_id")).as("b"))
-      .distinct())
+    val und = undirectedEdges(knn)
     // r19 wave 7: a moment-identity rewrite (sum_deg/sum_sq as
     // join-free vertex sums Σ deg², Σ deg³; sum_prod via the
     // neighbor-degree-sum fold) measured NEUTRAL at sf0.1 (1.44 s
@@ -4047,52 +3968,43 @@ object Vector {
       knn: DataFrame,
       nodes: DataFrame,
       sourceId: Long,
-      maxDepth: Int = 6,
-      smallGraphEdgeMax: Long = 2000000L
+      maxDepth: Int = 6
   ): DataFrame = {
     val spark = knn.sparkSession
     import spark.implicits._
-    // r19 small-graph fast path (the dupClusters gate precedent,
-    // guide §2.4): a kNN pair graph is k·n rows — when the
-    // materialized edge count fits one task's memory budget, the
-    // whole ≤ maxDepth frontier expansion is ONE in-memory BFS over
-    // a single co-group (one edge shuffle, one job) instead of
-    // maxDepth rounds of join + anti-join + localCheckpoint + count
-    // (2 jobs per round). Identical depths by definition of BFS —
-    // pinned differentially in VectorSpec. `knn` is the session-
-    // persisted graph in every registered consumer, so the gate's
-    // count() is a cached read; pass 0 to force the iterative
-    // cluster-grade loop.
+    // Single-task route on the kNN edge count: the whole ≤ maxDepth
+    // frontier expansion is ONE in-memory BFS instead of maxDepth
+    // rounds of join + anti-join + localCheckpoint + count (2 jobs
+    // per round). Identical depths by definition of BFS — pinned
+    // differentially in VectorSpec. `knn` is the session-persisted
+    // graph in every registered consumer, so the probe is a cached
+    // read.
     val eRaw = knn.select(col("vec_id").cast("long").as("src"),
       col("nbr_id").cast("long").as("dst"))
-    if (knn.count() <= smallGraphEdgeMax) {
-      val depths = eRaw.select(lit(0L).as("g"), col("src"),
-          col("dst")).as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          val adj = scala.collection.mutable
-            .LongMap.empty[scala.collection.mutable.ArrayBuffer[Long]]
-          def add(u: Long, v: Long): Unit =
-            adj.getOrElseUpdate(u,
-              scala.collection.mutable.ArrayBuffer.empty[Long]) += v
-          it.foreach { case (_, s, dd) => add(s, dd); add(dd, s) }
-          val depth = scala.collection.mutable.LongMap.empty[Int]
-          depth(sourceId) = 0
-          var frontier = List(sourceId)
-          var d = 0
-          while (d < maxDepth && frontier.nonEmpty) {
-            var next = List.empty[Long]
-            frontier.foreach { u =>
-              adj.getOrElse(u, Nil).foreach { v =>
-                if (!depth.contains(v)) { depth(v) = d + 1; next ::= v }
-              }
+    if (SingleTask.fits(knn.count())) {
+      val depths = SingleTask.run(eRaw.as[(Long, Long)]) { it =>
+        val adj = scala.collection.mutable
+          .LongMap.empty[scala.collection.mutable.ArrayBuffer[Long]]
+        def add(u: Long, v: Long): Unit =
+          adj.getOrElseUpdate(u,
+            scala.collection.mutable.ArrayBuffer.empty[Long]) += v
+        it.foreach { case (s, dd) => add(s, dd); add(dd, s) }
+        val depth = scala.collection.mutable.LongMap.empty[Int]
+        depth(sourceId) = 0
+        var frontier = List(sourceId)
+        var d = 0
+        while (d < maxDepth && frontier.nonEmpty) {
+          var next = List.empty[Long]
+          frontier.foreach { u =>
+            adj.getOrElse(u, Nil).foreach { v =>
+              if (!depth.contains(v)) { depth(v) = d + 1; next ::= v }
             }
-            frontier = next
-            d += 1
           }
-          depth.iterator.map { case (v, dp) => (v, dp) }
+          frontier = next
+          d += 1
         }
-        .toDF("v", "depth")
+        depth.iterator
+      }.toDF("v", "depth")
       // an empty edge set yields no group at all — re-seed the
       // source row the iterative path always carries (distinct:
       // when the group DID run, it already emitted (source, 0))
@@ -4161,10 +4073,7 @@ object Vector {
       knn: DataFrame,
       embeddings: DataFrame
   ): DataFrame = {
-    val und = graft.Caches.track("vec", knn
-      .select(least(col("vec_id"), col("nbr_id")).as("a"),
-        greatest(col("vec_id"), col("nbr_id")).as("b"))
-      .distinct())
+    val und = undirectedEdges(knn)
     val lab = embeddings.select(col("vec_id"), col("label"))
     val e = und
       .join(lab.withColumnRenamed("vec_id", "a")

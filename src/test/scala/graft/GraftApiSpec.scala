@@ -582,10 +582,6 @@ class GraftApiSpec extends SparkSpec {
       // the (doc_id, pos) rows shared by bloomDedupFpr and the
       // streaming BloomGate
       "bloomPositions",
-      // graph-nodes half of dupClustersPartitioned, factored out so
-      // dupClusters' small-graph gate can persist it before the
-      // singleton union (r19) — staging, not a user op
-      "partitionedComps",
       // qualityScore's keep-columns form (r19) — same score, extra
       // carried columns; staging for ops that need attributes the
       // scan already read

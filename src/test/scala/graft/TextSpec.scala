@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Text
+import graft.ops.{SingleTask, Text}
 
 /** Dedup / text-analysis operator behavior on controlled inputs. */
 class TextSpec extends SparkSpec {
@@ -247,12 +247,12 @@ class TextSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    // smallGraphEdgeMax = 0 forces the iterative loop — this test
-    // pins the reliable-checkpoint machinery, which the small-graph
-    // union-find route (r19) legitimately never touches
-    val m = Text.dupClusters(docs, pairs, checkpointDir = Some(dir),
-        smallGraphEdgeMax = 0L)
-      .collect()
+    // maxRows = 0 forces the iterative loop — this test pins the
+    // reliable-checkpoint machinery, which the single-task union-find
+    // route legitimately never touches
+    val m = SingleTask.maxRows.withValue(0L) {
+      Text.dupClusters(docs, pairs, checkpointDir = Some(dir)).collect()
+    }
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster"))
       .toMap
     assert(m(1L) == 1L && m(2L) == 1L && m(3L) == 1L)
@@ -293,12 +293,13 @@ class TextSpec extends SparkSpec {
     val pairsDf = edges.toDF("doc_a", "doc_b", "part")
     val part = assignments(
       Text.dupClustersPartitioned(docsDf, pairsDf))
-    // smallGraphEdgeMax = 0: the differential must exercise the
-    // ITERATIVE loop (default-gated dupClusters would route these
-    // tiny graphs to the same union-find being tested)
-    val iter = assignments(Text.dupClusters(docsDf,
-      pairsDf.select(col("doc_a"), col("doc_b")),
-      smallGraphEdgeMax = 0L))
+    // maxRows = 0: the differential must exercise the ITERATIVE loop
+    // (default-routed dupClusters would send these tiny graphs to the
+    // same union-find being tested)
+    val iter = SingleTask.maxRows.withValue(0L) {
+      assignments(Text.dupClusters(docsDf,
+        pairsDf.select(col("doc_a"), col("doc_b"))))
+    }
     assert(part == iter)
     // and the default small-graph gate must land on that same
     // fixpoint through its single-group union-find route (r19)
@@ -318,9 +319,10 @@ class TextSpec extends SparkSpec {
     val part = assignments(
       Text.dupClustersPartitioned(docsDf, pairsDf))
     assert(part.forall(_._2 == 0L))
-    val iter = assignments(Text.dupClusters(docsDf,
-      pairsDf.select(col("doc_a"), col("doc_b")),
-      smallGraphEdgeMax = 0L))
+    val iter = SingleTask.maxRows.withValue(0L) {
+      assignments(Text.dupClusters(docsDf,
+        pairsDf.select(col("doc_a"), col("doc_b"))))
+    }
     assert(part == iter)
   }
 
@@ -336,6 +338,13 @@ class TextSpec extends SparkSpec {
       .toDF("doc_a", "doc_b", "part")
     val s = assignments(Text.dupClustersPartitioned(docsDf, empty))
     assert(s == Seq(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    // dupClusters on the empty graph: the single-task route and the
+    // iterative loop (maxRows = 0 forces it even on no edges) agree
+    val noPairs = empty.select(col("doc_a"), col("doc_b"))
+    assert(assignments(Text.dupClusters(docsDf, noPairs)) == s)
+    assert(SingleTask.maxRows.withValue(0L) {
+      assignments(Text.dupClusters(docsDf, noPairs))
+    } == s)
   }
 
   test("sourceDedupTokens: token ledger follows the min-id keep " +
@@ -523,7 +532,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("seqPatterns: dense-count gate is row-identical to the " +
-      "broadcast Apriori pipeline (denseTripleMax = 0 forces it)") {
+      "broadcast Apriori pipeline (SingleTask.maxRows = 0 forces it)") {
     // token repeats (a a), a = b self-pairs, ties, and a doc with no
     // frequent token — the branchy cases of the greedy-t2 semantics
     val d = Seq(
@@ -539,8 +548,9 @@ class TextSpec extends SparkSpec {
         r.getAs[Long]("support_ppm"))).toSeq
     for (ppm <- Seq(200000L, 400000L, 600000L)) {
       val dense  = rows(Text.seqPatterns(d, ppm))
-      val legacy = rows(Text.seqPatterns(d, ppm,
-        denseTripleMax = 0L))
+      val legacy = SingleTask.maxRows.withValue(0L) {
+        rows(Text.seqPatterns(d, ppm))
+      }
       assert(dense == legacy, s"ppm=$ppm dense=$dense legacy=$legacy")
       assert(dense.nonEmpty || ppm > 900000L || dense == legacy)
     }
@@ -1346,25 +1356,28 @@ class TextSpec extends SparkSpec {
       out.toSeq
     }
 
-    val mergesDf = Text.bpeLearnMerges(d, nMerges = 10, minCount = 2L)
-    val got = mergesDf
+    def rows(merges: org.apache.spark.sql.DataFrame) = merges
       .orderBy(col("merge_rank")).collect()
       .map(r => (r.getAs[Int]("merge_rank"), r.getAs[String]("left"),
         r.getAs[String]("right"), r.getAs[Long]("pair_count"))).toSeq
+    val mergesDf = Text.bpeLearnMerges(d, nMerges = 10, minCount = 2L)
+    val got = rows(mergesDf)
     val want = refBpe(10, 2L)
     assert(got == want, s"got $got\nwant $want")
     // sanity on the classic corpus: first merges build up "est"
     assert(got.nonEmpty && got.head._4 == 9L)  // s+t appears 9×
-    // differential: the per-round job loop (smallVocabMax = 0
-    // forces it) must produce the exact same merge table as the
-    // default single-task path (r19)
-    val gotIter = Text
-      .bpeLearnMerges(d, nMerges = 10, minCount = 2L,
-        smallVocabMax = 0L)
-      .orderBy(col("merge_rank")).collect()
-      .map(r => (r.getAs[Int]("merge_rank"), r.getAs[String]("left"),
-        r.getAs[String]("right"), r.getAs[Long]("pair_count"))).toSeq
+    // differential: the per-round job loop (maxRows = 0 forces it)
+    // must produce the exact same merge table as the default
+    // single-task path, and no merges on an empty vocabulary
+    val gotIter = SingleTask.maxRows.withValue(0L) {
+      rows(Text.bpeLearnMerges(d, nMerges = 10, minCount = 2L))
+    }
     assert(gotIter == want, s"iter $gotIter\nwant $want")
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(rows(Text.bpeLearnMerges(noDocs, nMerges = 10)).isEmpty)
+    assert(SingleTask.maxRows.withValue(0L) {
+      rows(Text.bpeLearnMerges(noDocs, nMerges = 10))
+    }.isEmpty)
 
     // encode under the learned table: per-word piece counts match a
     // reference application of the merges in rank order

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Vector => Vec}
+import graft.ops.{SingleTask, Vector => Vec}
 
 /** Similarity-search operator behavior. */
 class VectorSpec extends SparkSpec {
@@ -1720,18 +1720,18 @@ class VectorSpec extends SparkSpec {
       .collect().map(r => r.getAs[Int]("depth") ->
         r.getAs[Long]("n_vecs")).toMap
     assert(m2 === Map(0 -> 1L, 1 -> 1L, 2 -> 1L, -1 -> 3L))
-    // differential: the default small-graph single-task BFS (r19)
-    // must land on the iterative loop's exact histogram, including
-    // a source with no incident edges (seed row survives the gate)
-    for (src <- Seq(0L, 5L); cap <- Seq(2, 6)) {
-      val gated = Vec.bfsDepths(edges, nodes, src, cap)
+    // differential: the default single-task BFS must land on the
+    // iterative loop's exact histogram, including a source with no
+    // incident edges (seed row survives the gate) and an empty graph
+    // (maxRows = 0 forces the loop even there)
+    val noEdges = Seq.empty[(Long, Long)].toDF("vec_id", "nbr_id")
+    for (e <- Seq(edges, noEdges); src <- Seq(0L, 5L); cap <- Seq(2, 6)) {
+      def run() = Vec.bfsDepths(e, nodes, src, cap)
         .collect().map(r => r.getAs[Int]("depth") ->
           r.getAs[Long]("n_vecs")).toMap
-      val iter = Vec.bfsDepths(edges, nodes, src, cap,
-        smallGraphEdgeMax = 0L)
-        .collect().map(r => r.getAs[Int]("depth") ->
-          r.getAs[Long]("n_vecs")).toMap
-      assert(gated === iter, s"src=$src cap=$cap")
+      val gated = run()
+      val iter = SingleTask.maxRows.withValue(0L)(run())
+      assert(gated === iter, s"src=$src cap=$cap edges=${e.count()}")
     }
   }
 
@@ -1739,47 +1739,53 @@ class VectorSpec extends SparkSpec {
       "row-identical to the iterative/join pipelines") {
     // two triangles bridged by an edge, a hub touching both, two
     // isolates: peel rounds strip shells, common-neighbor structure
-    // is non-trivial, isolates exercise the left-join tails
-    val knn = Seq(
+    // is non-trivial, isolates exercise the left-join tails; the
+    // empty graph is the one more input on which maxRows = 0 must
+    // still take the distributed path
+    val graph = Seq(
       (0L, 1L), (1L, 2L), (2L, 0L),
       (3L, 4L), (4L, 5L), (5L, 3L),
       (2L, 3L),
       (6L, 0L), (6L, 1L), (6L, 3L), (6L, 5L)
     ).toDF("vec_id", "nbr_id")
+    val noEdges = Seq.empty[(Long, Long)].toDF("vec_id", "nbr_id")
     val nodes = (0L to 8L).toDF("vec_id")
-    // ppr: connected seed, hub seed, isolated seed
-    for (seed <- Seq(0L, 6L, 8L)) {
-      def run(gate: Long) = Vec.pprAssigned(nodes, seed, iters = 3,
-        topN = 25, precomputedKnn = Some(knn),
-        smallGraphEdgeMax = gate).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("ppr_q20"),
+    for (knn <- Seq(graph, noEdges)) {
+      val g = s"edges=${knn.count()}"
+      // ppr: connected seed, hub seed, isolated seed
+      for (seed <- Seq(0L, 6L, 8L)) {
+        def run(gate: Long) = SingleTask.maxRows.withValue(gate) {
+          Vec.pprAssigned(nodes, seed, iters = 3, topN = 25,
+            precomputedKnn = Some(knn)).collect()
+        }.map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("ppr_q20"),
           r.getAs[Int]("rank"))).toSeq
-      assert(run(2000000L) == run(0L), s"ppr seed=$seed")
-    }
-    // k-core: varying peel depth and core threshold
-    for (rounds <- Seq(1, 3); coreK <- Seq(2, 3)) {
-      def run(gate: Long) = Vec.kCoreAssigned(nodes, coreK = coreK,
-        rounds = rounds, precomputedKnn = Some(knn),
-        smallGraphEdgeMax = gate).collect()
-        .map(r => r.getAs[Long]("vec_id") ->
+        assert(run(2000000L) == run(0L), s"ppr seed=$seed $g")
+      }
+      // k-core: varying peel depth and core threshold
+      for (rounds <- Seq(1, 3); coreK <- Seq(2, 3)) {
+        def run(gate: Long) = SingleTask.maxRows.withValue(gate) {
+          Vec.kCoreAssigned(nodes, coreK = coreK, rounds = rounds,
+            precomputedKnn = Some(knn)).collect()
+        }.map(r => r.getAs[Long]("vec_id") ->
           ((r.getAs[Long]("core_degree"),
             r.getAs[Boolean]("in_core")))).toMap
-      assert(run(2000000L) == run(0L), s"kcore r=$rounds k=$coreK")
-    }
-    // link prediction, both indices (ordered head — compare as seqs)
-    def runLp(gate: Long) = Vec.linkPredictionAssigned(nodes, k = 3,
-      topN = 100, precomputedKnn = Some(knn),
-      smallGraphEdgeMax = gate).collect()
-      .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
+        assert(run(2000000L) == run(0L), s"kcore r=$rounds k=$coreK $g")
+      }
+      // link prediction, both indices (ordered head — compare as seqs)
+      def runLp(gate: Long) = SingleTask.maxRows.withValue(gate) {
+        Vec.linkPredictionAssigned(nodes, k = 3, topN = 100,
+          precomputedKnn = Some(knn)).collect()
+      }.map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
         r.getAs[Long]("common_nbrs"), r.getAs[Long]("deg_a"),
         r.getAs[Long]("deg_b"), r.getAs[Long]("jaccard_ppm"))).toSeq
-    assert(runLp(2000000L) == runLp(0L), "link_pred")
-    def runRa(gate: Long) = Vec.resourceAllocationLinkPred(nodes,
-      k = 3, topN = 100, precomputedKnn = Some(knn),
-      smallGraphEdgeMax = gate).collect()
-      .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
+      assert(runLp(2000000L) == runLp(0L), s"link_pred $g")
+      def runRa(gate: Long) = SingleTask.maxRows.withValue(gate) {
+        Vec.resourceAllocationLinkPred(nodes, k = 3, topN = 100,
+          precomputedKnn = Some(knn)).collect()
+      }.map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
         r.getAs[Long]("common_nbrs"), r.getAs[Long]("ra_micro"))).toSeq
-    assert(runRa(2000000L) == runRa(0L), "link_pred_ra")
+      assert(runRa(2000000L) == runRa(0L), s"link_pred_ra $g")
+    }
   }
 
   test("labelConductance: hand-computed path graph; single-spanning " +

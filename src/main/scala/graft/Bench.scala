@@ -41,17 +41,17 @@ object Bench {
     // compute them) and the IVF quantizer fit (offline training; the
     // registered query times the probe path). Parse, dedup, candidate
     // generation etc. remain inside the timed queries.
-    ops.DemuxQueries.prewarm(spark, sfDir)
-    ops.CdcQueries.prewarm(spark, sfDir)
-    ops.VectorQueries.prewarm(spark, sfDir)
-    // cache-family of a timed entry (q_text_* → "text",
-    // cache:text:* → "text", ...): entries are processed family by
-    // family, so each family's shared persisted state (graft.Caches)
-    // can be released as soon as its run ends — the bench then
-    // measures steady state instead of an ever-growing cache pile.
-    def family(name: String): String =
-      if (name.startsWith("cache:")) name.split(":")(1)
-      else name.split("_").lift(1).getOrElse("")
+    def prewarm(): Unit = {
+      ops.DemuxQueries.prewarm(spark, sfDir)
+      ops.CdcQueries.prewarm(spark, sfDir)
+      ops.VectorQueries.prewarm(spark, sfDir)
+    }
+    prewarm()
+    // entries are processed family by family, so each family's shared
+    // persisted state (graft.Caches) can be released as soon as its
+    // run ends — the bench then measures steady state instead of an
+    // ever-growing cache pile.
+    import SparkEntry.family
     // Shared-cache builds are timed as their own `cache:<family>:*`
     // entries, FIRST in their family — so the alphabetically-first
     // consumer of a session cache reports its own marginal cost
@@ -85,12 +85,22 @@ object Bench {
       }
       buf.result()
     }
+    // every entry that threw in any pass, in run order: loud on
+    // stderr and listed in the full JSON (its time still counts)
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failed += name
+        -1L
+      }
     val results = entries.zipWithIndex.map {
       case ((name, fn), i) =>
         val t0 = System.nanoTime()
-        val n =
-          try fn(spark, sfDir).count()
-          catch { case _: Throwable => -1L }
+        val n = run(name, fn)
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] $name%-28s $dt%8.2fs  rows=$n")
         // outside the timed region: release family caches at the
@@ -115,9 +125,7 @@ object Bench {
     // shared-state rebuild pass 1 never saw (measured: prepare 60 s
     // retimed vs 3.5 s in-family).
     Caches.releaseAll()
-    ops.DemuxQueries.prewarm(spark, sfDir)
-    ops.CdcQueries.prewarm(spark, sfDir)
-    ops.VectorQueries.prewarm(spark, sfDir)
+    prewarm()
     val firstPass = results.toMap
     val toRetime = results.filter(_._2 > 2.0).map(_._1).toSet
     val fams = entries.map(e => family(e._1))
@@ -130,8 +138,7 @@ object Bench {
       if (famHasRetime(fam) && (toRetime(name) || isCache)) {
         def sample(): Double = {
           val t0 = System.nanoTime()
-          val n = try fn(spark, sfDir).count()
-            catch { case _: Throwable => -1L }
+          val n = run(name, fn)
           val dt = (System.nanoTime() - t0) / 1e9
           System.err.println(
             f"[bench] $name%-28s $dt%8.2fs  rows=$n (retime)")
@@ -182,8 +189,7 @@ object Bench {
         } else {
           // a sub-threshold cache build still has to RUN (warm state
           // for the family's retimed queries), just untimed
-          try fn(spark, sfDir).count()
-          catch { case _: Throwable => () }
+          run(name, fn)
         }
         System.gc()
       }
@@ -231,8 +237,9 @@ object Bench {
       .map { case (f, v) => "\"" + f + "\":" + v }
       .mkString("{", ",", "}")
     val total = r3(retimed.map(_._2).sum)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":$qs,"families":$famTotals,"host_probe_sec":${r3(math.min(probeStart, probeEnd))},"host_factor":$hostFactor,"total_sec":$total}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":$qs,"families":$famTotals,"failed":$failedJson,"host_probe_sec":${r3(math.min(probeStart, probeEnd))},"host_factor":$hostFactor,"total_sec":$total}"""
     val benchFile = new java.io.File("target/bench.json")
     Option(benchFile.getParentFile).foreach(_.mkdirs())
     java.nio.file.Files.writeString(benchFile.toPath, full + "\n")

@@ -67,6 +67,15 @@ object SparkEntry {
         "q_aa_canary" -> ((s, _) => canary(s)),
         "q_zz_canary" -> ((s, _) => canary(s)))
 
+  /** Cache family of a registered name (`q_text_*` and `cache:text:*`
+    * → "text", `q1_agg` → "1"): Bench and Verify run their entries
+    * family by family and release the family's [[Caches]] at each
+    * boundary.
+    */
+  def family(name: String): String =
+    if (name.startsWith("cache:")) name.split(":")(1)
+    else name.split("_").lift(1).getOrElse("")
+
   /** The alphabetical tail of the r10 sweep OOM'd inside the driver's
     * DuckDB (allocator exhaustion after ~200 connection cycles — each
     * failure a sub-MB block with >100 GB free). These queries get a

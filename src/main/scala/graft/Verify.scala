@@ -42,11 +42,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // family-sorted run order (q1_agg → "1"; q_text_* → "text"):
-    // groups each family's queries so its session caches are built
-    // once and releasable at the boundary
-    def family(name: String): String =
-      name.split("_").lift(1).getOrElse("")
+    // family-sorted run order: groups each family's queries so its
+    // session caches are built once and releasable at the boundary
+    import SparkEntry.family
     val todo = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .sortBy(_._1)

@@ -55,16 +55,22 @@ object Demux {
       .select(col("raw_value"), col("reason"))
   }
 
+  // Each branch's columns are declared once below; the branch
+  // functions and the one-pass `topicValues` both project them, which
+  // keeps the two forms' JSON values bit-for-bit aligned.
+
+  private val errorCols = Seq(
+    col("common.mid").as("mid"),
+    col("err.error_code").as("error_code"),
+    col("err.msg").as("msg"),
+    col("ts")
+  )
+
   /** T3: error branch — whole record routed, nothing else extracted. */
   def errors(parsed: DataFrame): DataFrame =
     parsed
       .filter(col("err").isNotNull)
-      .select(
-        col("common.mid").as("mid"),
-        col("err.error_code").as("error_code"),
-        col("err.msg").as("msg"),
-        col("ts")
-      )
+      .select(errorCols: _*)
 
   private def nonError(parsed: DataFrame): DataFrame =
     parsed.filter(col("err").isNull)
@@ -93,11 +99,41 @@ object Demux {
     col("page.source_type").as("source_type")
   )
 
+  private val pageLogCols = commonCols ++ pageCols :+ col("ts")
+
+  /** PageDisplayLog columns of one `displays` element `d`. */
+  private def displayCols(d: Column) = commonCols ++ pageCols ++ Seq(
+    d.getField("display_type").as("display_type"),
+    d.getField("item").as("display_item"),
+    d.getField("item_type").as("display_item_type"),
+    d.getField("order").as("display_order"),
+    d.getField("pos_id").as("display_pos_id"),
+    col("ts")
+  )
+
+  /** PageActionLog columns of one `actions` element `a`. */
+  private def actionCols(a: Column) = commonCols ++ pageCols ++ Seq(
+    a.getField("action_id").as("action_id"),
+    a.getField("item").as("action_item"),
+    a.getField("item_type").as("action_item_type"),
+    a.getField("ts").as("action_ts"),
+    col("ts")
+  )
+
+  private val startCols = commonCols ++ Seq(
+    col("start.entry").as("entry"),
+    col("start.open_ad_id").as("open_ad_id"),
+    col("start.loading_time").as("loading_time_ms"),
+    col("start.open_ad_ms").as("open_ad_ms"),
+    col("start.open_ad_skip_ms").as("open_ad_skip_ms"),
+    col("ts")
+  )
+
   /** T5: PageLog (16 cols, `bean/PageLog.scala:3-20`). */
   def pages(parsed: DataFrame): DataFrame =
     nonError(parsed)
       .filter(col("page").isNotNull)
-      .select(commonCols ++ pageCols :+ col("ts"): _*)
+      .select(pageLogCols: _*)
 
   /** T6: correlated unnest of `displays` → PageDisplayLog (21 cols,
     * `bean/PageDisplayLog.scala:3-26`). `explode` drops null/empty
@@ -107,23 +143,8 @@ object Demux {
   def displays(parsed: DataFrame): DataFrame =
     nonError(parsed)
       .filter(col("page").isNotNull)
-      .select(
-        (commonCols ++ pageCols) :+
-          explode(col("displays")).as("d") :+ col("ts"): _*
-      )
-      .select(
-        col("mid"), col("user_id"), col("province_id"), col("channel"),
-        col("is_new"), col("model"), col("operate_system"),
-        col("version_code"), col("brand"), col("page_id"),
-        col("last_page_id"), col("page_item"), col("page_item_type"),
-        col("during_time"), col("source_type"),
-        col("d.display_type").as("display_type"),
-        col("d.item").as("display_item"),
-        col("d.item_type").as("display_item_type"),
-        col("d.order").as("display_order"),
-        col("d.pos_id").as("display_pos_id"),
-        col("ts")
-      )
+      .withColumn("d", explode(col("displays")))
+      .select(displayCols(col("d")): _*)
 
   /** T7: unnest of `actions` → PageActionLog (20 cols; per-action ts
     * kept alongside record ts, `OdsBaseLogApp.scala:163-165`).
@@ -131,36 +152,14 @@ object Demux {
   def actions(parsed: DataFrame): DataFrame =
     nonError(parsed)
       .filter(col("page").isNotNull)
-      .select(
-        (commonCols ++ pageCols) :+
-          explode(col("actions")).as("a") :+ col("ts"): _*
-      )
-      .select(
-        col("mid"), col("user_id"), col("province_id"), col("channel"),
-        col("is_new"), col("model"), col("operate_system"),
-        col("version_code"), col("brand"), col("page_id"),
-        col("last_page_id"), col("page_item"), col("page_item_type"),
-        col("during_time"), col("source_type"),
-        col("a.action_id").as("action_id"),
-        col("a.item").as("action_item"),
-        col("a.item_type").as("action_item_type"),
-        col("a.ts").as("action_ts"),
-        col("ts")
-      )
+      .withColumn("a", explode(col("actions")))
+      .select(actionCols(col("a")): _*)
 
   /** T8: StartLog (15 cols, `bean/StartLog.scala:3-19`). */
   def starts(parsed: DataFrame): DataFrame =
     nonError(parsed)
       .filter(col("start").isNotNull)
-      .select(
-        commonCols :+
-          col("start.entry").as("entry") :+
-          col("start.open_ad_id").as("open_ad_id") :+
-          col("start.loading_time").as("loading_time_ms") :+
-          col("start.open_ad_ms").as("open_ad_ms") :+
-          col("start.open_ad_skip_ms").as("open_ad_skip_ms") :+
-          col("ts"): _*
-      )
+      .select(startCols: _*)
 
   // --- typed DWD surface (`Dataset[bean]`, the reference's
   // `bean/*.scala` case classes) — same plans as the untyped branch
@@ -239,45 +238,20 @@ object Demux {
       struct(lit(topic).as("topic"), to_json(payload).as("value"))
     val empty = array()
       .cast("array<struct<topic:string,value:string>>")
-    // the SAME projection vals the branch functions use — one
-    // definition keeps the one-pass output bit-for-bit aligned with
-    // toJsonValue(branch) (the differential spec pins it)
-    val commonS = commonCols
-    val pageS = pageCols
     val isErr = col("err").isNotNull
     val onPage = !isErr && col("page").isNotNull
-    val errArr = when(isErr, array(el(errorTopic, struct(
-      col("common.mid").as("mid"),
-      col("err.error_code").as("error_code"),
-      col("err.msg").as("msg"),
-      col("ts"))))).otherwise(empty)
-    val pageArr = when(onPage, array(el(pageTopic,
-      struct(commonS ++ pageS :+ col("ts"): _*)))).otherwise(empty)
+    val errArr = when(isErr, array(el(errorTopic, struct(errorCols: _*))))
+      .otherwise(empty)
+    val pageArr = when(onPage, array(el(pageTopic, struct(pageLogCols: _*))))
+      .otherwise(empty)
     val dispArr = when(onPage && col("displays").isNotNull,
-      transform(col("displays"), d => el(displayTopic, struct(
-        commonS ++ pageS ++ Seq(
-          d.getField("display_type").as("display_type"),
-          d.getField("item").as("display_item"),
-          d.getField("item_type").as("display_item_type"),
-          d.getField("order").as("display_order"),
-          d.getField("pos_id").as("display_pos_id"),
-          col("ts")): _*)))).otherwise(empty)
+      transform(col("displays"),
+        d => el(displayTopic, struct(displayCols(d): _*)))).otherwise(empty)
     val actArr = when(onPage && col("actions").isNotNull,
-      transform(col("actions"), a => el(actionTopic, struct(
-        commonS ++ pageS ++ Seq(
-          a.getField("action_id").as("action_id"),
-          a.getField("item").as("action_item"),
-          a.getField("item_type").as("action_item_type"),
-          a.getField("ts").as("action_ts"),
-          col("ts")): _*)))).otherwise(empty)
+      transform(col("actions"),
+        a => el(actionTopic, struct(actionCols(a): _*)))).otherwise(empty)
     val startArr = when(!isErr && col("start").isNotNull,
-      array(el(startTopic, struct(commonS ++ Seq(
-        col("start.entry").as("entry"),
-        col("start.open_ad_id").as("open_ad_id"),
-        col("start.loading_time").as("loading_time_ms"),
-        col("start.open_ad_ms").as("open_ad_ms"),
-        col("start.open_ad_skip_ms").as("open_ad_skip_ms"),
-        col("ts")): _*)))).otherwise(empty)
+      array(el(startTopic, struct(startCols: _*)))).otherwise(empty)
     parsed
       .select(explode(
         concat(errArr, pageArr, dispArr, actArr, startArr)).as("tv"))

@@ -2674,16 +2674,7 @@ object TextQueries {
     // shared jac-pair stack -> components -> provenance rollup
     "q_text_cluster_spread" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |cl AS (SELECT doc_id, MIN(r) AS cluster
          |       FROM reach GROUP BY doc_id),
          |cs AS (
@@ -3140,16 +3131,7 @@ object TextQueries {
          |FROM sh GROUP BY n_shards ORDER BY n_shards""".stripMargin,
     "q_text_dedup_impact" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |asg AS (SELECT doc_id, MIN(r) AS cluster
          |        FROM reach GROUP BY doc_id),
          |cs AS (SELECT cluster, COUNT(*) AS cluster_size
@@ -3231,16 +3213,7 @@ object TextQueries {
     // expression: per-doc milli floor BEFORE the size rollup
     "q_text_dup_quality_bias" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |comp AS (
          |  SELECT doc_id, MIN(r) AS cluster
          |  FROM reach GROUP BY doc_id),
@@ -3266,32 +3239,14 @@ object TextQueries {
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_text_dup_clusters" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src)
+         |$jacComponentsSql
          |SELECT doc_id, MIN(r) AS cluster
          |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     // the dup_clusters component fragment joined onto per-doc token
     // counts; dropped-token ppm HUGEINT-bridged like the op
     "q_text_source_dedup_tokens" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |comp AS (
          |  SELECT doc_id, MIN(r) AS cluster
          |  FROM reach GROUP BY doc_id),
@@ -3320,16 +3275,7 @@ object TextQueries {
     // same recursive-CTE component assignment; all-integer q20 sums
     "q_text_soft_dedup_weights" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |comp AS (
          |  SELECT doc_id, MIN(r) AS cluster
          |  FROM reach GROUP BY doc_id),
@@ -3695,16 +3641,7 @@ object TextQueries {
     // max-struct(quality, -doc_id))
     "q_text_cluster_survivors" ->
       s"""WITH RECURSIVE $jacPairsSql,
-         |e AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |    WHERE jaccard >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
-         |reach(doc_id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.doc_id, e.dst
-         |  FROM reach JOIN e ON reach.r = e.src),
+         |$jacComponentsSql,
          |cl AS (
          |  SELECT doc_id, MIN(r) AS cluster FROM reach GROUP BY doc_id),
          |qt AS (
@@ -4979,6 +4916,24 @@ object TextQueries {
       |  GROUP BY nn.doc_id)""".stripMargin
 
   private def jacPairsSql = jacPairsSqlOver("documents")
+
+  /** Shared oracle fragment over `jac`: the symmetric edges
+    * `e(src, dst)` at jaccard >= 0.5 and their recursive closure
+    * `reach(doc_id, r)` over every document (component id =
+    * `MIN(r)`) — one source of truth for the dup-cluster components
+    * (needs `WITH RECURSIVE`).
+    */
+  private def jacComponentsSql =
+    """e AS (
+      |  SELECT doc_a AS src, doc_b AS dst FROM jac
+      |    WHERE jaccard >= 0.5
+      |  UNION ALL
+      |  SELECT doc_b, doc_a FROM jac WHERE jaccard >= 0.5),
+      |reach(doc_id, r) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT reach.doc_id, e.dst
+      |  FROM reach JOIN e ON reach.r = e.src)""".stripMargin
 
   /** Width-parameterized exhaustive pair CTE block for the
     * shingle-width curve (the oracle needs no prefix filter — it

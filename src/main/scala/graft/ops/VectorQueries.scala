@@ -173,11 +173,11 @@ object VectorQueries {
     "cache:vec:knn_graph_coarse" -> ((s, d) => knnGraphCoarseDf(s, d))
   )
 
-  /** Exact n²-twin SQL shared by q_vec_neardup and its quantized
-    * serving form (both emit the identical pair set by the sound-
-    * margin argument in [[Vector.cosineNearDup]]).
+  /** Every pair of distinct vectors at exact cosine >= 0.4: the
+    * oracle of q_vec_neardup_exact and the uncapped core of
+    * [[neardupExactTwinSql]].
     */
-  private val neardupExactTwinSql: String =
+  private def exactTwinPairsSql =
     """WITH n AS (
       |  SELECT vec_id,
       |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
@@ -197,12 +197,128 @@ object VectorQueries {
       |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
       |  GROUP BY 1, 2)
       |SELECT vec_a, vec_b, cos_sim FROM p
-      |WHERE cos_sim >= 0.4
+      |WHERE cos_sim >= 0.4""".stripMargin
+
+  /** Exact n²-twin SQL shared by q_vec_neardup and its quantized
+    * serving form (both emit the identical pair set by the sound-
+    * margin argument in [[Vector.cosineNearDup]]).
+    */
+  private val neardupExactTwinSql: String =
+    s"""$exactTwinPairsSql
       |-- per-left-endpoint cap mirror (non-binding at validation
       |-- SFs: max pairs/vector there is 3)
       |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_a
       |  ORDER BY cos_sim DESC, vec_b) <= 8
       |ORDER BY vec_a, vec_b""".stripMargin
+
+  /** Shared oracle fragment: each vector's 4-per-axis grid cell
+    * over its first four unit coordinates, `u(vec_id, c0..c3)`, and
+    * the cell sizes `c(c0..c3, cell_count)` — one source of truth
+    * for the grid of the coverage, grid-density and coreset oracles.
+    */
+  private def gridCellsSql =
+    """n AS (
+      |  SELECT vec_id,
+      |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
+      |             ORDER BY i)) AS nrm
+      |  FROM (SELECT vec_id,
+      |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
+      |          UNNEST(embedding) AS x FROM embeddings)
+      |  GROUP BY vec_id),
+      |u AS (
+      |  SELECT e.vec_id,
+      |    CAST(FLOOR(CAST(e.embedding[1] AS DOUBLE) / n.nrm * 4)
+      |      AS INT) AS c0,
+      |    CAST(FLOOR(CAST(e.embedding[2] AS DOUBLE) / n.nrm * 4)
+      |      AS INT) AS c1,
+      |    CAST(FLOOR(CAST(e.embedding[3] AS DOUBLE) / n.nrm * 4)
+      |      AS INT) AS c2,
+      |    CAST(FLOOR(CAST(e.embedding[4] AS DOUBLE) / n.nrm * 4)
+      |      AS INT) AS c3
+      |  FROM embeddings e JOIN n USING (vec_id)),
+      |c AS (SELECT c0, c1, c2, c3, COUNT(*) AS cell_count
+      |      FROM u GROUP BY 1, 2, 3, 4)""".stripMargin
+
+  /** Shared oracle fragment: L2 norms `n` and the label-carrying unit
+    * rows `u(vec_id, label, i, ux)` — one source of truth for the
+    * normalisation every labelled vector oracle starts from.
+    */
+  private def unitVecSql =
+    """n AS (
+      |  SELECT vec_id, label,
+      |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
+      |             ORDER BY i)) AS nrm
+      |  FROM (SELECT vec_id, label,
+      |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
+      |          UNNEST(embedding) AS x
+      |        FROM embeddings)
+      |  GROUP BY vec_id, label),
+      |u AS (
+      |  SELECT e.vec_id, n.label,
+      |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
+      |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
+      |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id)""".stripMargin
+
+  /** Shared oracle fragment over `u`: the directed candidate pairs
+    * `p(vec_id, nbr_id, cos_sim)` of [[knnGraphDf]]'s lists (same
+    * label, same [[sublisted]] sublist) — one source of truth for
+    * the sublist rule.
+    */
+  private def knnPairsSql =
+    """p AS (
+      |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
+      |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
+      |  FROM u a JOIN u b
+      |    ON a.i = b.i AND a.label = b.label
+      |    -- scale-capped sublist rule (m = 1 at validation SFs)
+      |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
+      |                    FROM embeddings)
+      |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
+      |                    FROM embeddings)
+      |    AND a.vec_id <> b.vec_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** The coarse twin of [[knnPairsSql]] for [[knnGraphCoarseDf]]:
+    * lists keyed by `label % 4` under the same sublist cap.
+    */
+  private def coarseKnnPairsSql =
+    """mt AS (
+      |  SELECT GREATEST(1, COUNT(*) // 1250) AS m
+      |  FROM embeddings),
+      |p AS (
+      |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
+      |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
+      |  FROM u a CROSS JOIN mt JOIN u b
+      |    ON a.i = b.i
+      |    AND (a.label % 4) * mt.m + a.vec_id % mt.m
+      |      = (b.label % 4) * mt.m + b.vec_id % mt.m
+      |    AND a.vec_id <> b.vec_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  private def knnRankSql = knnRankSqlOver(knnPairsSql)
+
+  /** Shared oracle fragment: `pairs` (a CTE chain ending in `p`), then
+    * each vector's neighbours ranked `r(vec_id, nbr_id, rk)`, ties to
+    * the lower id and NaN cosines dropped (the Spark op's zero-norm
+    * policy) — one source of truth for the kNN graph every graph
+    * oracle keeps at `rk <= 3`.
+    */
+  private def knnRankSqlOver(pairs: String) =
+    s"""$pairs,
+      |r AS (
+      |  SELECT vec_id, nbr_id,
+      |    ROW_NUMBER() OVER (PARTITION BY vec_id
+      |      ORDER BY cos_sim DESC, nbr_id) AS rk
+      |  FROM p WHERE NOT isnan(cos_sim))""".stripMargin
+
+  /** Shared oracle fragment over `r`: the kNN graph's distinct
+    * undirected edges as `name(a, b)`, `a < b`.
+    */
+  private def undirectedKnnSql(name: String) =
+    s"""$name AS MATERIALIZED (
+      |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
+      |         GREATEST(vec_id, nbr_id) AS b
+      |       FROM r WHERE rk <= 3)""".stripMargin
 
   val queries: Map[String, Q] = Map(
     "q_vec_cosine_topk" -> ((s, d) =>
@@ -1140,20 +1256,7 @@ object VectorQueries {
         |      END AS BIGINT)), ',') AS qvec_csv
         |FROM m ORDER BY vec_id""".stripMargin,
     "q_vec_incremental_semantic" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH $unitVecSql,
         |p AS (
         |  -- ORDER BY inside the SUM pins the fp summation to list
         |  -- order — Spark's decDot folds in list order, and DuckDB's
@@ -1168,32 +1271,8 @@ object VectorQueries {
         |WHERE cos_sim >= 0.3
         |ORDER BY vec_a, vec_b""".stripMargin,
     "q_vec_knn_graph" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH $unitVecSql,
+        |$knnPairsSql,
         |r AS (
         |  -- NOT isnan mirrors the Spark op's zero-norm policy
         |  SELECT vec_id, nbr_id, cos_sim,
@@ -1206,31 +1285,8 @@ object VectorQueries {
     // (LEFT JOIN restores zero-degree rows) and exact moments;
     // hub cutoff 2k = 6
     "q_vec_hubness" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH $unitVecSql,
+        |$knnPairsSql,
         |r AS (
         |  SELECT vec_id, nbr_id,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1256,27 +1312,7 @@ object VectorQueries {
     // mean best-cosine over the corpus; per-x q20 floors summed as
     // integers (order-free), sign-split ppm division
     "q_vec_coverage" ->
-      """WITH n AS (
-        |  SELECT vec_id,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x FROM embeddings)
-        |  GROUP BY vec_id),
-        |u AS (
-        |  SELECT e.vec_id,
-        |    CAST(FLOOR(CAST(e.embedding[1] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c0,
-        |    CAST(FLOOR(CAST(e.embedding[2] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c1,
-        |    CAST(FLOOR(CAST(e.embedding[3] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c2,
-        |    CAST(FLOOR(CAST(e.embedding[4] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c3
-        |  FROM embeddings e JOIN n USING (vec_id)),
-        |c AS (SELECT c0, c1, c2, c3, COUNT(*) AS cell_count
-        |      FROM u GROUP BY 1, 2, 3, 4),
+      s"""WITH $gridCellsSql,
         |d AS (
         |  SELECT u.vec_id, c.cell_count
         |  FROM u JOIN c USING (c0, c1, c2, c3)),
@@ -1338,37 +1374,8 @@ object VectorQueries {
     // symmetrized, then per-community exact q20 terms (h = d_c·2^20
     // div 2m; deg term = h² div 2^20 — the documented double floor)
     "q_vec_modularity" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |mt AS (
-        |  SELECT GREATEST(1, COUNT(*) // 1250) AS m
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a CROSS JOIN mt JOIN u b
-        |    ON a.i = b.i
-        |    AND (a.label % 4) * mt.m + a.vec_id % mt.m
-        |      = (b.label % 4) * mt.m + b.vec_id % mt.m
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |${knnRankSqlOver(coarseKnnPairsSql)},
         |e AS (
         |  SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
         |    GREATEST(vec_id, nbr_id) AS b
@@ -1404,44 +1411,12 @@ object VectorQueries {
     // three unrolled peel rounds (degree -> alive >= 2 -> edge
     // filter); all counts exact BIGINTs
     "q_vec_kcore" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |-- MATERIALIZED: each e_r is referenced 3× by round r+1; left
         |-- as inline views the expansion is 3^rounds copies of the
         |-- whole kNN fragment (observed: 60 GB RSS, no completion)
-        |e0 AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+        |${undirectedKnnSql("e0")},
         |d1 AS (SELECT v, COUNT(*) AS deg FROM (
         |         SELECT a AS v FROM e0 UNION ALL SELECT b FROM e0)
         |       GROUP BY 1),
@@ -1476,44 +1451,12 @@ object VectorQueries {
     // triangle enumeration a<b<c, each triangle credited to all
     // three corners; `//` == `div` on the non-negative operands
     "q_vec_triangle_coeff" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |-- MATERIALIZED: ed feeds the degree union and the 3-way
         |-- triangle self-join (5 references) — inline views would
         |-- replicate the kNN fragment 5×
-        |ed AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+        |${undirectedKnnSql("ed")},
         |deg AS (SELECT v, COUNT(*) AS degree FROM (
         |          SELECT a AS v FROM ed
         |          UNION ALL SELECT b FROM ed) GROUP BY 1),
@@ -1561,20 +1504,7 @@ object VectorQueries {
         |FROM pr ORDER BY label_a, label_b""".stripMargin,
     // the within-list pair fragment, bucketed on the exact double
     "q_vec_cos_histogram" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH $unitVecSql,
         |p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -1599,36 +1529,8 @@ object VectorQueries {
     // label-sublisted kNN stack (the shared-graph build), in-degree
     // rollup + degree-0 completion from the embeddings domain
     "q_vec_degree_hist" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |e AS (SELECT vec_id, nbr_id FROM r WHERE rk <= 3),
         |ind AS (
         |  SELECT nbr_id AS vec_id, CAST(COUNT(*) AS BIGINT) AS deg
@@ -1650,37 +1552,8 @@ object VectorQueries {
     // coarse (label % 4) kNN stack, then per-label same-label edge
     // shares
     "q_vec_knn_purity" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |mt AS (
-        |  SELECT GREATEST(1, COUNT(*) // 1250) AS m
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a CROSS JOIN mt JOIN u b
-        |    ON a.i = b.i
-        |    AND (a.label % 4) * mt.m + a.vec_id % mt.m
-        |      = (b.label % 4) * mt.m + b.vec_id % mt.m
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |${knnRankSqlOver(coarseKnnPairsSql)},
         |e AS (SELECT vec_id, nbr_id FROM r WHERE rk <= 3)
         |SELECT la.label AS label,
         |  CAST(COUNT(*) AS BIGINT) AS n_edges,
@@ -1694,36 +1567,8 @@ object VectorQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     // same kNN edge CTE stack, then the reversed-pair self-join
     "q_vec_reciprocity" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |e AS MATERIALIZED (
         |  SELECT vec_id, nbr_id FROM r WHERE rk <= 3),
         |rc AS (
@@ -1737,40 +1582,9 @@ object VectorQueries {
     // same kNN edge CTE stack, then Newman r over both-orientations
     // endpoint degrees — pure-integer Pearson (equal marginals)
     "q_vec_assortativity" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
-        |ed AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
+        |${undirectedKnnSql("ed")},
         |deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM (
         |          SELECT a AS v FROM ed
         |          UNION ALL SELECT b FROM ed) GROUP BY 1),
@@ -1798,36 +1612,8 @@ object VectorQueries {
     // same kNN edge stack symmetrized + depth-capped recursive walk;
     // MIN(d) per vertex is the BFS distance within the cap
     "q_vec_bfs_depths" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH RECURSIVE $unitVecSql,
+        |$knnRankSql,
         |ed AS MATERIALIZED (
         |       SELECT vec_id AS a, nbr_id AS b
         |       FROM r WHERE rk <= 3),
@@ -1853,40 +1639,9 @@ object VectorQueries {
     // same kNN edge stack; per-label cut/volume counting in pure
     // integers (conductance = cut / min(vol, vol_total - vol))
     "q_vec_conductance" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
-        |ed AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
+        |${undirectedKnnSql("ed")},
         |lab AS (SELECT vec_id, label FROM embeddings),
         |el AS (
         |  SELECT ed.a, ed.b, la.label AS la, lb.label AS lb
@@ -1916,20 +1671,7 @@ object VectorQueries {
     // the q_vec_semantic_dedup recursive-component stack + the size
     // rollup: exact integer histogram with ppm corpus share
     "q_vec_component_sizes" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH RECURSIVE $unitVecSql,
         |p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -1962,20 +1704,7 @@ object VectorQueries {
     // threshold sweep over the same within-label pair table: per
     // tau, pair count + recursive-reach component stats + dedup drop
     "q_vec_dedup_curve" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH RECURSIVE $unitVecSql,
         |p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -2064,36 +1793,8 @@ object VectorQueries {
     // same kNN edge CTE stack, then the q20 normalize-by-max HITS
     // recurrence unrolled: a1 ∝ in-degree, h2, a2 — exact integers
     "q_vec_hits" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |e AS MATERIALIZED (
         |  SELECT vec_id, nbr_id FROM r WHERE rk <= 3),
         |ind AS (SELECT nbr_id AS v, CAST(COUNT(*) AS BIGINT) AS c
@@ -2121,40 +1822,9 @@ object VectorQueries {
     // 2-hop common-neighbor counts on the symmetrized list with a
     // non-edge anti filter and a deterministic top-100
     "q_vec_link_pred" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
-        |ed AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
+        |${undirectedKnnSql("ed")},
         |sym AS (SELECT a AS v, b AS w FROM ed
         |        UNION ALL SELECT b, a FROM ed),
         |deg AS (SELECT v, COUNT(*) AS degree FROM sym GROUP BY 1),
@@ -2178,40 +1848,9 @@ object VectorQueries {
         |ORDER BY c.common_nbrs DESC, jaccard_ppm DESC, vec_a, vec_b
         |LIMIT 100""".stripMargin,
     "q_vec_link_pred_ra" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
-        |ed AS MATERIALIZED (
-        |       SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
-        |         GREATEST(vec_id, nbr_id) AS b
-        |       FROM r WHERE rk <= 3),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
+        |${undirectedKnnSql("ed")},
         |sym AS (SELECT a AS v, b AS w FROM ed
         |        UNION ALL SELECT b, a FROM ed),
         |deg AS (SELECT v, COUNT(*) AS degree FROM sym GROUP BY 1),
@@ -2391,37 +2030,8 @@ object VectorQueries {
     // `//` on non-negative BIGINTs is the same floor division as
     // Spark's `div`, and every sum is exact, so the twin is bitwise
     "q_vec_pagerank" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |e AS (SELECT vec_id AS src, nbr_id AS dst FROM r
         |      WHERE rk <= 3),
         |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
@@ -2461,36 +2071,8 @@ object VectorQueries {
     // p0 = 2^20 at the seed) — 3 unrolled rounds, then the top-25
     // TakeOrdered cut with its rank
     "q_vec_ppr" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT vec_id, nbr_id,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, nbr_id) AS rk
-        |  FROM p WHERE NOT isnan(cos_sim)),
+      s"""WITH $unitVecSql,
+        |$knnRankSql,
         |e AS (SELECT vec_id AS src, nbr_id AS dst FROM r
         |      WHERE rk <= 3),
         |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
@@ -2536,32 +2118,8 @@ object VectorQueries {
     // vec_id) — every fragment is the proven twin of its Spark
     // counterpart
     "q_vec_cluster_reps" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH RECURSIVE $unitVecSql,
+        |$knnPairsSql,
         |pr_ AS (SELECT vec_id AS vec_a, nbr_id AS vec_b FROM p
         |        WHERE vec_id < nbr_id AND cos_sim >= 0.4),
         |ce AS (
@@ -2624,20 +2182,7 @@ object VectorQueries {
     // fragment; intersection counts and the ppm quotient are exact
     // integers
     "q_vec_knn_recall" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH $unitVecSql,
         |pa AS (
         |  SELECT a.vec_id AS query_id, b.vec_id AS vec_id,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -2689,20 +2234,7 @@ object VectorQueries {
     // same approx/exact ranking fragments as q_vec_knn_recall,
     // reduced to graded order-sensitive metrics instead of set recall
     "q_vec_ranking_metrics" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH $unitVecSql,
         |pa AS (
         |  SELECT a.vec_id AS query_id, b.vec_id AS vec_id,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -2830,32 +2362,8 @@ object VectorQueries {
         |SELECT vec_id, neg_id, cos_sim, "rank" FROM r
         |WHERE "rank" <= 2 ORDER BY vec_id, "rank"""".stripMargin,
     "q_vec_density_prune" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b
-        |    ON a.i = b.i AND a.label = b.label
-        |    -- scale-capped sublist rule (m = 1 at validation SFs)
-        |    AND a.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |      = b.vec_id % (SELECT GREATEST(1, COUNT(*) // 1250)
-        |                    FROM embeddings)
-        |    AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH $unitVecSql,
+        |$knnPairsSql,
         |r AS (
         |  SELECT vec_id, nbr_id, cos_sim,
         |    ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2874,20 +2382,7 @@ object VectorQueries {
         |FROM embeddings e LEFT JOIN dens ON e.vec_id = dens.vec_id
         |ORDER BY e.vec_id""".stripMargin,
     "q_vec_semantic_pairs" ->
-      """WITH n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH $unitVecSql,
         |p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -2899,20 +2394,7 @@ object VectorQueries {
         |WHERE cos_sim >= 0.4
         |ORDER BY vec_a, vec_b""".stripMargin,
     "q_vec_semantic_dedup" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT vec_id, label,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id, label,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x
-        |        FROM embeddings)
-        |  GROUP BY vec_id, label),
-        |u AS (
-        |  SELECT e.vec_id, n.label,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
+      s"""WITH RECURSIVE $unitVecSql,
         |p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
@@ -2933,26 +2415,7 @@ object VectorQueries {
         |SELECT vec_id, MIN(r) AS cluster, vec_id = MIN(r) AS keep
         |FROM reach GROUP BY vec_id ORDER BY vec_id""".stripMargin,
     "q_vec_neardup_exact" ->
-      """WITH n AS (
-        |  SELECT vec_id,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x FROM embeddings)
-        |  GROUP BY vec_id),
-        |u AS (
-        |  SELECT e.vec_id,
-        |    CAST(generate_subscripts(e.embedding, 1) AS INT) AS i,
-        |    CAST(UNNEST(e.embedding) AS DOUBLE) / n.nrm AS ux
-        |  FROM embeddings e JOIN n ON e.vec_id = n.vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    SUM(a.ux * b.ux ORDER BY a.i) AS cos_sim
-        |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-        |  GROUP BY 1, 2)
-        |SELECT vec_a, vec_b, cos_sim FROM p
-        |WHERE cos_sim >= 0.4
+      s"""$exactTwinPairsSql
         |ORDER BY vec_a, vec_b""".stripMargin,
     "q_vec_batch_topk" ->
       """WITH q AS (
@@ -3460,52 +2923,12 @@ object VectorQueries {
         |SELECT rank, vec_id, rel, mmr_score FROM sel
         |ORDER BY rank""".stripMargin,
     "q_vec_grid_density" ->
-      """WITH n AS (
-        |  SELECT vec_id,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x FROM embeddings)
-        |  GROUP BY vec_id),
-        |u AS (
-        |  SELECT e.vec_id,
-        |    CAST(FLOOR(CAST(e.embedding[1] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c0,
-        |    CAST(FLOOR(CAST(e.embedding[2] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c1,
-        |    CAST(FLOOR(CAST(e.embedding[3] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c2,
-        |    CAST(FLOOR(CAST(e.embedding[4] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c3
-        |  FROM embeddings e JOIN n USING (vec_id)),
-        |c AS (SELECT c0, c1, c2, c3, COUNT(*) AS cell_count
-        |      FROM u GROUP BY 1, 2, 3, 4)
+      s"""WITH $gridCellsSql
         |SELECT u.vec_id, u.c0, u.c1, u.c2, u.c3, c.cell_count
         |FROM u JOIN c USING (c0, c1, c2, c3)
         |ORDER BY u.vec_id""".stripMargin,
     "q_vec_coreset_sample" ->
-      """WITH n AS (
-        |  SELECT vec_id,
-        |    sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |             ORDER BY i)) AS nrm
-        |  FROM (SELECT vec_id,
-        |          CAST(generate_subscripts(embedding, 1) AS INT) AS i,
-        |          UNNEST(embedding) AS x FROM embeddings)
-        |  GROUP BY vec_id),
-        |u AS (
-        |  SELECT e.vec_id,
-        |    CAST(FLOOR(CAST(e.embedding[1] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c0,
-        |    CAST(FLOOR(CAST(e.embedding[2] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c1,
-        |    CAST(FLOOR(CAST(e.embedding[3] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c2,
-        |    CAST(FLOOR(CAST(e.embedding[4] AS DOUBLE) / n.nrm * 4)
-        |      AS INT) AS c3
-        |  FROM embeddings e JOIN n USING (vec_id)),
-        |c AS (SELECT c0, c1, c2, c3, COUNT(*) AS cell_count
-        |      FROM u GROUP BY 1, 2, 3, 4),
+      s"""WITH $gridCellsSql,
         |d AS (
         |  SELECT u.vec_id, c.cell_count
         |  FROM u JOIN c USING (c0, c1, c2, c3)),

@@ -200,6 +200,25 @@ class GraftApiSpec extends SparkSpec {
       s"un-CAST SUM in final projection (HUGEINT hazard): $offenders")
   }
 
+  /** Shared oracle fragments are spliced into `s"""…""".stripMargin`
+    * templates. A template missing its `s` prefix leaves `$name` or
+    * `${…}` in the SQL; a fragment line starting with `|` is stripped
+    * twice and loses its margin (`||` concatenation loses one bar).
+    * Lint: no `$` before a letter or `{` (JSON paths like `'$.k'`
+    * pass) and no line whose first non-blank character is a lone `|`.
+    */
+  test("no template residue in any oracle") {
+    val residue = "\\$[A-Za-z{]\\w*".r
+    val offenders = SparkEntry.oracleSql.toSeq.flatMap { case (k, sql) =>
+      residue.findAllIn(sql).map(m => s"$k: $m").toSeq ++
+        sql.split("\n").map(_.trim).collect {
+          case l if l.startsWith("|") && !l.startsWith("||") =>
+            s"$k: ${l.take(60)}"
+        }
+    }
+    assert(offenders.isEmpty, s"template residue in oracle SQL: $offenders")
+  }
+
   /** r14 shipped three driver-red rows, all from final-projection
     * dtype choices the local tooling tolerated: DECIMAL(38,0) columns
     * hash-diverge (Spark parquet and DuckDB fetchdf map wide decimals
